@@ -8,6 +8,19 @@ pushdown and column pruning for free (SURVEY.md §4).
 At 100 TB the same layout holds: each logical table is a date-partitioned,
 symbol-bucketed parquet/Delta table; ``load`` only ever issues
 ``spark.read.parquet`` with pushed filters, never a driver-side scan.
+
+Schema cache.  A bare ``spark.read.parquet(path)`` infers the schema from
+parquet footers, and that inference is a Spark job of its own — paid on
+every request that loads a table.  ``read_parquet`` keeps one inferred
+schema per table path and reads with ``spark.read.schema(s)`` while the
+table is unchanged.  The entry is keyed on the stat of the table's root
+directory and of its ``_SUCCESS`` marker: every Spark commit to the path
+(overwrite, append, dynamic partition overwrite) creates and removes its
+``_temporary`` / ``.spark-staging-*`` directory under the root, which moves
+the root's mtime, so the next read infers again.  The file listing is never
+cached — each read lists the directory afresh, so appended rows show at
+once.  A table without a marker (not committed by Spark, or not on the
+local filesystem) is inferred on every call.
 """
 
 from __future__ import annotations
@@ -15,6 +28,7 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 # Driver-provided test tables (TESTDATA.md).
 TESTDATA_TABLES = (
@@ -60,6 +74,39 @@ class Catalog:
         ]
 
 
+# table path -> (commit stamp, inferred schema); see the module docstring
+_SCHEMAS: dict[str, tuple[tuple, StructType]] = {}
+
+
+def _commit_stamp(path: str) -> tuple | None:
+    """Stat of a table's root directory and ``_SUCCESS`` marker — changes on
+    every Spark commit to ``path``; None when there is no local marker."""
+    try:
+        root = os.stat(path)
+        marker = os.stat(os.path.join(path, "_SUCCESS"))
+    except OSError:
+        return None
+    return (
+        root.st_ino, root.st_mtime_ns, root.st_ctime_ns,
+        marker.st_ino, marker.st_mtime_ns,
+    )
+
+
+def read_parquet(spark: SparkSession, path: str) -> DataFrame:
+    """``spark.read.parquet(path)`` without the per-call schema-inference
+    job while the table is unchanged (module docstring: schema cache)."""
+    stamp = _commit_stamp(path)
+    hit = _SCHEMAS.get(path)
+    if stamp is not None and hit is not None and hit[0] == stamp:
+        return spark.read.schema(hit[1]).parquet(path)
+    df = spark.read.parquet(path)
+    if stamp is not None:
+        # stamped before inference: a commit racing it only forces the
+        # next call to infer again
+        _SCHEMAS[path] = (stamp, df.schema)
+    return df
+
+
 def load_table(spark: SparkSession, root: str, name: str) -> DataFrame:
     """Load a parquet table, normalizing nanosecond timestamps.
 
@@ -77,7 +124,7 @@ def load_table(spark: SparkSession, root: str, name: str) -> DataFrame:
     # timestamp semantics must match the DuckDB oracle (UTC-naive) even when
     # the caller (driver) built the session without our defaults
     spark.conf.set("spark.sql.session.timeZone", "UTC")
-    df = spark.read.parquet(os.path.join(root, f"{name}.parquet"))
+    df = read_parquet(spark, os.path.join(root, f"{name}.parquet"))
     if name == "events" and isinstance(df.schema["ts"].dataType, LongType):
         df = df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
     return df

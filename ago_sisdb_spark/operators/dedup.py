@@ -27,6 +27,9 @@ from ago_sisdb_spark.materialize import materialize
 # 2^31-1: keeps a*h products inside int64 (Spark 4 runs ANSI mode — long
 # overflow raises instead of wrapping).
 _MERSENNE = (1 << 31) - 1
+# permutation seed shared by every MinHash route (kernel, expressions and
+# the DuckDB oracle SQL) so their signatures agree
+_DEFAULT_SEED = 7
 
 
 def content_digest(text: Column) -> Column:
@@ -171,7 +174,7 @@ def minhash_signatures(
     text_col: str,
     shingle_k: int,
     num_hashes: int,
-    seed: int = 7,
+    seed: int = _DEFAULT_SEED,
 ) -> DataFrame:
     """(id, sig array) per document: h_i(x) = (a_i·xxhash64(x)+b_i) mod p,
     min over shingles.
@@ -194,7 +197,7 @@ def _minhash_mins(
     text_col: str,
     shingle_k: int,
     num_hashes: int,
-    seed: int = 7,
+    seed: int = _DEFAULT_SEED,
     portable: bool = False,
     min_words: int | None = None,
 ) -> DataFrame:
@@ -441,6 +444,17 @@ def _portable_band_rows_udf(
     return gen
 
 
+def _check_bands(num_hashes: int, bands: int) -> None:
+    """Every band holds ``num_hashes // bands`` rows: refuse a split that
+    would leave hashes over (the kernel would fail mid-job on the reshape,
+    the expression form would silently drop them)."""
+    if bands <= 0 or num_hashes % bands:
+        raise ValueError(
+            f"bands must be positive and divide num_hashes; got "
+            f"num_hashes={num_hashes}, bands={bands}"
+        )
+
+
 def minhash_band_rows(
     df: DataFrame,
     id_col: str,
@@ -469,6 +483,7 @@ def minhash_band_rows(
     pins ``doc`` to long)."""
     from pyspark.sql.types import LongType
 
+    _check_bands(num_hashes, bands)
     if portable and not df.isStreaming and isinstance(
         df.schema[id_col].dataType, LongType
     ):
@@ -483,7 +498,7 @@ def minhash_band_rows(
             F.col(id_col).alias("doc"), F.col(text_col).alias("__text")
         ).mapInPandas(
             _portable_band_rows_udf(
-                shingle_k, num_hashes, bands, 7, min_words
+                shingle_k, num_hashes, bands, _DEFAULT_SEED, min_words
             ),
             "doc long, band int, bucket long",
         )
@@ -1189,7 +1204,7 @@ def minhash_lsh_oracle_sql(
     shingle_k: int = 3,
     num_hashes: int = 32,
     bands: int = 8,
-    seed: int = 7,
+    seed: int = _DEFAULT_SEED,
     max_bucket_size: int = 1000,
 ) -> str:
     """DuckDB SQL reproducing ``minhash_lsh_candidates(..., portable=True)``
@@ -1530,7 +1545,7 @@ def minhash_screen_oracle_sql(
     shingle_k: int = 3,
     num_hashes: int = 32,
     bands: int = 8,
-    seed: int = 7,
+    seed: int = _DEFAULT_SEED,
     max_bucket_size: int = 1000,
 ) -> str:
     """DuckDB twin of ``build_minhash_index(portable=True)`` +
@@ -1596,6 +1611,7 @@ def minhash_band_rows_stateless(
     per-permutation minima are array_min over a hashed-shingle array
     that is materialized ONCE per row (each affine transform touches only
     the lambda variable — no re-hash per permutation, no HOF re-eval)."""
+    _check_bands(num_hashes, bands)
     rows = num_hashes // bands
     wdf = df.select(
         F.col(id_col).alias("doc"),
@@ -1619,7 +1635,7 @@ def minhash_band_rows_stateless(
                 F.col("__h"), lambda h: (F.lit(a) * h + F.lit(b)) % F.lit(_MERSENNE)
             )
         ).alias(f"s{i}")
-        for i, (a, b) in enumerate(_perm_params(num_hashes, 7))
+        for i, (a, b) in enumerate(_perm_params(num_hashes, _DEFAULT_SEED))
     ]
     wide = with_h.select("doc", *mins)
 
@@ -1811,7 +1827,7 @@ def minhash_estimator_oracle_sql(
     shingle_k: int = 3,
     num_hashes: int = 32,
     bands: int = 8,
-    seed: int = 7,
+    seed: int = _DEFAULT_SEED,
     max_bucket_size: int = 1000,
 ) -> str:
     """DuckDB twin of ``minhash_estimator_audit``: same shingles / hash /

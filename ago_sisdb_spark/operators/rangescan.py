@@ -12,20 +12,41 @@ The reference's read command addresses a sorted time series with
 - ``ifprev``              → if nothing at ``start``'s day, fall back to the
                             most recent earlier day that has data
 
-Spark re-expression: a ``between`` filter (pushed down to the parquet scan —
-at 100 TB this is partition pruning + row-group min/max skipping, the same
-job the reference's per-day block index does, see SURVEY §4) followed by an
-``ORDER BY … LIMIT`` for head/tail.  ``ifprev`` becomes a scalar-subquery
-"max day with data ≤ start" — one extra lightweight aggregate over the pruned
-scan, no driver-side collect.
+Spark re-expression: a ``between`` filter (pushed down to the parquet scan
+for row-group min/max skipping) plus, on the landed layout, the matching
+``dt`` day-partition bounds, so only the day directories the range touches
+are opened — the job the reference's per-day block index does (SURVEY §4);
+then an ``ORDER BY … LIMIT`` for head/tail.  ``ifprev`` becomes a
+scalar-subquery "max day with data ≤ start" — one extra lightweight
+aggregate over the pruned scan, no driver-side collect.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import DateType, TimestampNTZType, TimestampType
 
 LATEST = -1  # sentinel, mirroring the reference protocol
+
+# the landed layout's day partition: dt = to_date(time_col) under the UTC
+# session time zone (streaming.write.write_partitioned,
+# sources.ingest.materialize_table)
+DAY_COL = "dt"
+
+
+def _day_type(df: DataFrame, time_col: str):
+    """``time_col``'s type when ``df`` carries the layout's DateType ``dt``
+    column beside a date/timestamp ``time_col``; None otherwise."""
+    types = {f.name: f.dataType for f in df.schema.fields}
+    t = types.get(time_col)
+    if (
+        time_col != DAY_COL
+        and isinstance(types.get(DAY_COL), DateType)
+        and isinstance(t, (TimestampType, TimestampNTZType, DateType))
+    ):
+        return t
+    return None
 
 
 def time_range(
@@ -37,16 +58,30 @@ def time_range(
     """[start, stop] inclusive slice on the (sorted) time column.
 
     ``None``/``LATEST`` bounds are open.  The filter is a plain Column
-    predicate so it reaches the parquet scan as a pushed filter.
+    predicate so it reaches the parquet scan as a pushed filter.  On the
+    landed layout (a ``dt`` DateType column = ``to_date(time_col)``) each
+    bound also bounds ``dt`` by ``to_date`` of the bound, cast to
+    ``time_col``'s type as the comparison casts it — a PartitionFilter, so
+    the scan opens only the days in range.  ``to_date`` is monotonic, so
+    the day bounds drop no row the time bounds keep.
     """
-    c = F.col(time_col)
-    if start is not None and start != LATEST and stop is not None and stop != LATEST:
-        return df.where(c.between(F.lit(start), F.lit(stop)))
-    if start is not None and start != LATEST:
-        return df.where(c >= F.lit(start))
-    if stop is not None and stop != LATEST:
-        return df.where(c <= F.lit(stop))
-    return df
+    lo = start is not None and start != LATEST
+    hi = stop is not None and stop != LATEST
+    if not (lo or hi):
+        return df
+
+    def within(col: Column, bound) -> Column:
+        if lo and hi:
+            return col.between(bound(start), bound(stop))
+        return col >= bound(start) if lo else col <= bound(stop)
+
+    pred = within(F.col(time_col), F.lit)
+    t = _day_type(df, time_col)
+    if t is not None:
+        pred = pred & within(
+            F.col(DAY_COL), lambda v: F.to_date(F.lit(v).cast(t))
+        )
+    return df.where(pred)
 
 
 def head_n(df: DataFrame, n: int, order: list[Column]) -> DataFrame:
@@ -155,7 +190,7 @@ def ifprev_day_scan(df: DataFrame, time_col: str, start) -> DataFrame:
     a cheap broadcast join; both passes prune partitions by ``ts <= start``).
     """
     day = F.to_date(F.col(time_col))
-    bounded = df.where(F.col(time_col) <= F.lit(start))
+    bounded = time_range(df, time_col, None, start)
     target = bounded.agg(F.max(day).alias("__target_day"))
     return (
         bounded.join(F.broadcast(target), day == F.col("__target_day"))

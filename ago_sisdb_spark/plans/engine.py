@@ -334,14 +334,33 @@ class Engine:
     def psub(self, key_sdbs: list[str], start=None, stop=None) -> DataFrame:
         """`psub` (T2, `sisdb.c:494-546`): historical replay — all requested
         key.sdb streams merged to one event-time-ordered DataFrame; iterate
-        with ``toLocalIterator`` for one-by-one emission."""
+        with ``toLocalIterator`` for one-by-one emission.
+
+        All keys of one sdb resolve in ONE scan, as in ``gets``.  Rows at
+        the same event time emit in requested-key order: a row's merge
+        order is the list position of the first requested key it matches
+        (a row matched by several patterns is emitted once).
+        """
         from ago_sisdb_spark.streaming.replay import replay_range
 
-        tables = []
-        for ks in key_sdbs:
-            df, spec, _ = self._resolve(ks)
+        by_sdb: dict[str, list[tuple[int, str]]] = {}
+        for i, ks in enumerate(key_sdbs):
+            key, _, sdb = ks.rpartition(".")
+            by_sdb.setdefault(sdb, []).append((i, key or "*"))
+        tables, orders = [], []
+        for sdb, keys in by_sdb.items():
+            pattern = "*" if any(k == "*" for _, k in keys) else ",".join(
+                k for _, k in keys
+            )
+            df, spec, _ = self._resolve(f"{pattern}.{sdb}")
+            key_str = F.col(spec.key_col).cast("string")
             tables.append((spec.table, df, spec.key_col, spec.time_col))
-        return replay_range(self.spark, tables, start=start, stop=stop)
+            orders.append(F.coalesce(
+                *[F.when(key_pattern_filter(key_str, k), i) for i, k in keys]
+            ))
+        return replay_range(
+            self.spark, tables, start=start, stop=stop, orders=orders
+        )
 
     @_requires(ACCESS_READ)
     def sub(self, key_sdb: str, stream: DataFrame, query_name: str = "subscription"):

@@ -19,10 +19,13 @@ rewrite small files into size-targeted ones, preserving the sort.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+import datetime
+import re
+
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
-from ago_sisdb_spark.catalog import load_table
+from ago_sisdb_spark.catalog import load_table, read_parquet
 
 
 def materialize_table(
@@ -40,7 +43,10 @@ def materialize_table(
 
     The written table needs no session conf and no normalization expression,
     so filters on ``time_col`` push down to the scan (asserted in
-    tests/test_ingest.py by inspecting PushedFilters).
+    tests/test_ingest.py by inspecting PushedFilters).  The partition
+    column is ``dt = to_date(time_col)`` under the UTC session time zone
+    (``load_table`` pins it), the invariant ``rangescan.time_range``'s day
+    pruning relies on.
     """
     df = load_table(spark, src_root, name)
     writer_df = df
@@ -139,6 +145,20 @@ def materialize_bucketed(
     return spark.table(table_name)
 
 
+def _newest_day(spark: SparkSession, path: str) -> datetime.date | None:
+    """The newest ``dt`` partition value of a dt-partitioned table, read
+    from its file listing — no schema inference, no Spark job.  None when
+    the table does not exist or has no data files."""
+    from pyspark.errors import AnalysisException
+
+    try:
+        files = spark.read.schema("dt date").parquet(path).inputFiles()
+    except AnalysisException:
+        return None
+    days = [m.group(1) for f in files if (m := re.search(r"/dt=([^/]+)/", f))]
+    return datetime.date.fromisoformat(max(days)) if days else None
+
+
 def incremental_rollup(
     spark: SparkSession,
     src_path: str,
@@ -153,31 +173,31 @@ def incremental_rollup(
     than what the destination already holds, append them partition-wise.
 
     The batch twin of the streaming convert service (T7 daily cutover):
-    each run reads max(dt) from the (tiny) destination footer stats, prunes
-    the source scan to dt >= watermark — partition pruning makes the refresh
+    each run takes the watermark day — the newest ``dt`` partition value
+    in the destination's file listing, no Spark job — and prunes the
+    source scan to dt >= watermark, so partition pruning makes the refresh
     cost proportional to NEW data only, never a full-history rescan.  The
     watermark day itself is RE-aggregated and its destination partition
     dynamically overwritten (not appended), so a day partition ingested in
     several batches converges instead of leaving the newest day's bars
     stale (ADVICE r1).  Correct because bars never span days when width
     divides a day (the reference's day-file invariant).  Returns the number
-    of rows written.
+    of rows written, counted by an ``Observation`` inside the write job
+    (0 when there is nothing to aggregate: the write then touches no
+    partition).
     """
     from ago_sisdb_spark.operators.rollup import ohlcv
 
-    src = spark.read.parquet(src_path)
+    src = read_parquet(spark, src_path)
     if "dt" not in src.columns:
         raise ValueError("source must be dt-partitioned (materialize_table)")
-    try:
-        done = spark.read.parquet(dst_path).agg(F.max("dt")).first()[0]
-    except Exception:
-        done = None
+    done = _newest_day(spark, dst_path)
     fresh = src.where(F.col("dt") >= F.lit(done)) if done is not None else src
-    if fresh.head(1) == []:
-        return 0
     bars = ohlcv(fresh, key_cols, time_col, price_col, width, order_col=order_col)
-    out = bars.withColumn("dt", F.to_date("bar_start"))
-    n = out.count()
+    written = Observation()
+    out = bars.withColumn("dt", F.to_date("bar_start")).observe(
+        written, F.count(F.lit(1)).alias("rows")
+    )
     # dynamic mode: overwrite ONLY the dt partitions present in `out`
     # (the watermark day + newer); completed older days are untouched
     (
@@ -187,4 +207,4 @@ def incremental_rollup(
         .partitionBy("dt")
         .parquet(dst_path)
     )
-    return n
+    return written.get["rows"]

@@ -21,20 +21,21 @@ the continue-live mode.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 
 def normalize_for_merge(
     df: DataFrame,
     source: str,
-    source_order: int,
+    source_order: int | Column,
     key_col: str,
     time_col: str,
     seq_col: str | None = None,
 ) -> DataFrame:
     """Project a table to the merge shape (key, event_time, source,
-    __order, __seq, payload-json)."""
+    __order, __seq, payload-json).  ``source_order`` may be a per-row
+    Column (``Engine.psub``: the requested-key position of each row)."""
     payload_cols = [c for c in df.columns if c not in (key_col, time_col)]
     return df.select(
         F.col(key_col).cast("string").alias("key"),
@@ -47,18 +48,22 @@ def normalize_for_merge(
 
 
 def kway_merge(tables: list[tuple[str, DataFrame, str, str]],
-               seq_cols: dict[str, str] | None = None) -> DataFrame:
+               seq_cols: dict[str, str] | None = None,
+               orders: list[int | Column] | None = None) -> DataFrame:
     """T3: merge heterogeneous tables into one event-time-ordered stream.
 
     ``tables`` = [(source_name, df, key_col, time_col), …].  Output is one
     DataFrame sorted by (event_time, __order, __seq) — the deterministic
     replay order; a consumer iterates with ``toLocalIterator`` to get the
     reference's one-by-one emission without collecting the whole stream.
+    ``__order`` is the table's list position unless ``orders`` gives one
+    (int or per-row Column) per table.
     """
     seq_cols = seq_cols or {}
+    orders = orders or list(range(len(tables)))
     parts = [
-        normalize_for_merge(df, name, i, key, time, seq_cols.get(name))
-        for i, (name, df, key, time) in enumerate(tables)
+        normalize_for_merge(df, name, o, key, time, seq_cols.get(name))
+        for o, (name, df, key, time) in zip(orders, tables)
     ]
     merged = parts[0]
     for p in parts[1:]:
@@ -71,20 +76,22 @@ def replay_range(
     tables: list[tuple[str, DataFrame, str, str]],
     start=None,
     stop=None,
+    orders: list[int | Column] | None = None,
 ) -> DataFrame:
     """T2 batch replay: date/time-pruned k-way merge.
 
-    The time filter is applied per-table *before* the union so partition
-    pruning and row-group skipping happen at each source scan.
+    The time filter (``rangescan.time_range``: time bounds plus ``dt``
+    day-partition bounds on the landed layout) is applied per-table
+    *before* the union so partition pruning and row-group skipping happen
+    at each source scan.  ``orders`` as in ``kway_merge``.
     """
-    bounded = []
-    for name, df, key, time in tables:
-        if start is not None:
-            df = df.where(F.col(time) >= F.lit(start))
-        if stop is not None:
-            df = df.where(F.col(time) <= F.lit(stop))
-        bounded.append((name, df, key, time))
-    return kway_merge(bounded)
+    from ago_sisdb_spark.operators.rangescan import time_range
+
+    bounded = [
+        (name, time_range(df, time, start, stop), key, time)
+        for name, df, key, time in tables
+    ]
+    return kway_merge(bounded, orders=orders)
 
 
 def replay_stream(

@@ -109,10 +109,14 @@ def write_partitioned(
     data in the reference; date for intraday — `sis_disk.io.h:44-54`).
 
     The generated ``dt`` partition column is what turns every time-range
-    query into partition pruning at 100 TB.  ``sortWithinPartitions`` by
-    (key, time) gives row-group min/max locality per key — the Spark
-    analogue of the reference's per-key block index.
+    query into partition pruning at 100 TB: ``dt = to_date(time_col)``
+    under the UTC session time zone (pinned here, as ``load_table`` pins
+    it for reads), the invariant ``rangescan.time_range``'s day bounds
+    rely on.  ``sortWithinPartitions`` by (key, time) gives row-group
+    min/max locality per key — the Spark analogue of the reference's
+    per-key block index.
     """
+    df.sparkSession.conf.set("spark.sql.session.timeZone", "UTC")
     out = df.withColumn("dt", F.to_date(F.col(time_col)))
     sort_cols = [key_bucket_col, time_col] if key_bucket_col else [time_col]
     (

@@ -980,7 +980,7 @@ def test_portable_band_rows_kernel_matches_expression(spark):
         (4, "two words"),               # < 3: truncated shingle / dropped
         (5, ""),                        # split("") == [""] → 1 "word"
         (6, None),                      # NULL text emits nothing
-        (7, "nbsp is not whitespace on either engine"),
+        (7, "nbsp\u00a0is not whitespace on either engine"),
         (8, "ünïcödé überall naïve café résumé"),
         (9, "a  b   c    d"),           # runs of spaces collapse
         (10, "alpha beta gamma delta"),  # exact dup of 1: same buckets
@@ -1032,6 +1032,23 @@ def test_portable_band_rows_kernel_matches_expression(spark):
     )
     assert "MapInPandas" in plan
     assert "Generate" not in plan and "HashAggregate" not in plan
+
+
+def test_band_rows_kernel_route_rejects_uneven_bands(corpus):
+    """The mapInPandas kernel route (portable, bigint ids) refuses a
+    ``num_hashes`` that ``bands`` does not divide, when the plan is built
+    — not mid-job on the kernel's reshape."""
+    with pytest.raises(ValueError, match="divide num_hashes"):
+        dedup.minhash_band_rows(corpus, "doc_id", "text", 3, 30, 8, portable=True)
+
+
+def test_band_rows_expression_route_rejects_uneven_bands(corpus):
+    """The expression route fails the same way instead of silently
+    dropping the hashes past ``bands * (num_hashes // bands)``."""
+    with pytest.raises(ValueError, match="divide num_hashes"):
+        dedup.minhash_band_rows(corpus, "doc_id", "text", 3, 30, 8)
+    with pytest.raises(ValueError, match="divide num_hashes"):
+        dedup.minhash_band_rows_stateless(corpus, "doc_id", "text", 3, 30, 8)
 
 
 def test_portable_band_rows_kernel_nonlong_id_falls_back(spark):

@@ -212,12 +212,28 @@ def test_bset_arrow_ingest(eng, spark, sf_small):
     assert merged.count() == n + 1
 
 
-def test_psub_replay_merge(eng, spark, sf_small):
+def test_psub_replay_merge(eng, spark, sf_small, tmp_path):
     out = eng.psub(["*.events", "*.orders"])
     rows = out.limit(50).collect()
     assert {"events", "orders"} >= {r.source for r in rows}
     times = [r.event_time for r in out.limit(200).collect()]
     assert times == sorted(times)
+
+    # the keys of one sdb resolve in one scan; a same-timestamp tie across
+    # two keys emits in requested-key order
+    from datetime import datetime, timedelta
+
+    t = datetime(2024, 1, 2, 9, 30)
+    spark.createDataFrame(
+        [(1, t, 1.0), (2, t, 2.0), (2, t - timedelta(seconds=1), 3.0)],
+        "k long, ts timestamp, v double",
+    ).write.parquet(str(tmp_path / "ticks.parquet"))
+    ticks = Engine(spark, str(tmp_path), {"ticks": TableSpec("ticks", "k", "ts")})
+    for keys in (["2", "1"], ["1", "2"]):
+        out = ticks.psub([f"{k}.ticks" for k in keys])
+        assert [r.key for r in out.collect()] == ["2", *keys]
+        plan = out._jdf.queryExecution().executedPlan().toString()
+        assert plan.split("== Initial Plan ==")[0].count("FileScan parquet") == 1
 
 
 def test_get_offset_addressing(eng, spark, sf_small):

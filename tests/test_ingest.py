@@ -4,6 +4,8 @@ guarantee every 100 TB range query depends on."""
 
 from __future__ import annotations
 
+import os
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -146,6 +148,22 @@ def test_incremental_rollup_processes_only_new_partitions(spark, tmp_path):
     # re-run with nothing new: only the watermark day re-aggregates, data stable
     assert incremental_rollup(spark, src, dst, ["sym"], "ts", "px", "1 hour", "seq") == 2
     assert spark.read.parquet(dst).count() == 4
+
+
+def test_incremental_rollup_empty_source_returns_zero(spark, tmp_path):
+    """A dt-partitioned source with no rows: nothing aggregated, 0 bars,
+    no destination partition written."""
+    from ago_sisdb_spark.sources.ingest import incremental_rollup
+
+    src = str(tmp_path / "ticks")
+    dst = str(tmp_path / "bars")
+    spark.createDataFrame([], "sym string, ts timestamp, px double, seq int").write.parquet(
+        src + "/dt=2024-01-01"
+    )
+    assert incremental_rollup(spark, src, dst, ["sym"], "ts", "px", "1 hour", "seq") == 0
+    assert not os.path.isdir(dst) or not any(
+        f.startswith("dt=") for f in os.listdir(dst)
+    )
 
 
 def test_incremental_rollup_converges_on_late_watermark_day_data(spark, tmp_path):
