@@ -649,11 +649,11 @@ def cluster_assign(
     n_clusters: int = 8,
     centroids: DataFrame | None = None,
 ) -> DataFrame:
-    """Nearest-centroid cluster id per vector as a LITERAL-expression
-    projection over the scan (the IVF assignment machinery,
-    similarity._ranked_lists_expr): centroids are k×dim by definition —
-    driver-small — so assignment must never touch a shuffle or a
-    crossJoin.  Ranking is (cosine DESC, centroid_id ASC), ties pinned.
+    """Nearest-centroid cluster id per vector as a projection over the
+    scan (the IVF assignment kernel, ``similarity.nearest_centroids``):
+    centroids are k×dim by definition — driver-small — so assignment
+    must never touch a shuffle or a crossJoin.  Ranking is (cosine DESC,
+    centroid_id ASC), ties pinned; a NULL vector gets a NULL cluster.
 
     ``centroids`` defaults to the training-free deterministic seed (the
     ``n_clusters`` lowest-id vectors); pass a trained table
@@ -661,7 +661,7 @@ def cluster_assign(
     production.  Returns (id, cluster)."""
     from ago_sisdb_spark.operators.similarity import (
         _collect_centroids,
-        _ranked_lists_expr,
+        nearest_centroids,
     )
 
     cent = (
@@ -674,12 +674,10 @@ def cluster_assign(
             F.col(vec_col).alias("__cent"),
         )
     )
-    cent_rows = _collect_centroids(cent)
+    nearest = nearest_centroids(_collect_centroids(cent), 1)
     return emb.select(
         F.col(id_col),
-        F.element_at(
-            _ranked_lists_expr(vec_col, cent_rows, 1), 1
-        )["cid"].alias("cluster"),
+        F.element_at(nearest(F.col(vec_col)), 1).alias("cluster"),
     )
 
 

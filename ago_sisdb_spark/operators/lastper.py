@@ -135,8 +135,8 @@ def topk_global(
     no funnel however large the input.  (A constant ``partitionBy`` lit
     would NOT work: Catalyst strips foldable partition keys and the spec
     comes out empty anyway.)  The sort key is the lambda-free negated-
-    struct form (see ``similarity._ranked_lists_expr`` — outer HOF
-    comparators break Spark 4 self-join dedup)."""
+    struct form (outer HOF comparators break Spark 4 self-join dedup:
+    INTERNAL_ERROR_ATTRIBUTE_NOT_FOUND)."""
     lim = df.orderBy(F.desc(score_col), tie_col).limit(k)
     row = F.struct(*[F.col(c) for c in df.columns])
     packed = lim.agg(

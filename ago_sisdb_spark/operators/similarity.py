@@ -8,9 +8,10 @@ set is small.
 
 Scale path: LSH bucketing via random hyperplanes (signed projections) —
 probe and corpus hash to the same buckets; candidate set per probe shrinks
-by ~2^bits; exact re-rank inside buckets.  Bit hashing is also pure
-expressions.  (IVF needs trained centroids = an offline k-means job; the
-random-hyperplane variant is training-free and fully distributed.)
+by ~2^bits; exact re-rank inside buckets.  Bit hashing is one numpy
+matmul per Arrow batch.  (IVF needs trained centroids = an offline k-means
+job, served through the ``nearest_centroids`` kernel; the random-hyperplane
+variant is training-free and fully distributed.)
 """
 
 from __future__ import annotations
@@ -145,68 +146,6 @@ def mat_blocks(ids, mat, norms, block_rows: int | None = None):
         )
 
 
-def pair_cosine_exact():
-    """Arrow-batched pairwise cosine, BIT-IDENTICAL to the ``cosine()``
-    expression: per row of (vec_a, vec_b), the exact sequential fold
-    (one rounded multiply+add per dimension — numpy block math over the
-    batch, the ``fold_cosine_block`` convention).  Drop-in replacement
-    for ``cosine()`` in candidate-scoring projections: a NULL vector or
-    a length mismatch yields NULL exactly as the expression form does
-    (zip_with null-pads → null product → null fold), and zero norms
-    yield the same IEEE NaN/Inf (one measured divergence: a zero-norm
-    pair is NaN here where the ANSI expression form ERRORS with
-    DIVIDE_BY_ZERO — strictly more defined).
-
-    MEASURED tradeoff (r13 A/B at sf0.1): swapping this into the
-    candidate-bounded rerank paths (ivf_topk, lsh_topk, PQ re-rank)
-    REGRESSED them 1.7–2.2× — below ~10⁶ candidates the Python worker
-    round-trip and the loss of whole-stage fusion with the downstream
-    window cost more than the interpreted lambdas do, so those sites
-    keep the expression form.  Reach for this only when a pair-scoring
-    projection measurably dominates (millions of candidate rows per
-    task); for bounded-side × corpus scans the closure-matrix block
-    kernels (``fold_cosine_block`` partials — e10/d5/n1) are the right
-    shape instead."""
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql.functions import pandas_udf
-
-    globals()["pd"] = pd
-
-    @pandas_udf("double")
-    def pair_cos(a: pd.Series, b: pd.Series) -> pd.Series:
-        av = a.to_numpy()
-        bv = b.to_numpy()
-        # masked nullable output: NULL exactly where the expression form
-        # is NULL; a computed NaN (degenerate norms) stays NaN — an
-        # object-dtype series would silently turn NaN into NULL
-        vals = np.zeros(len(av))
-        null = np.ones(len(av), dtype=bool)
-        by_len: dict[int, list[int]] = {}
-        for i, (x, y) in enumerate(zip(av, bv)):
-            if x is None or y is None or len(x) != len(y):
-                continue  # the expression form scores these NULL
-            by_len.setdefault(len(x), []).append(i)
-        for dim, idx in by_len.items():
-            x = np.vstack([av[i] for i in idx]).astype(np.float64)
-            y = np.vstack([bv[i] for i in idx]).astype(np.float64)
-            acc = np.zeros(len(idx))
-            nx = np.zeros(len(idx))
-            ny = np.zeros(len(idx))
-            with np.errstate(over="ignore", divide="ignore", invalid="ignore"):
-                for j in range(dim):
-                    acc += x[:, j] * y[:, j]
-                    nx += x[:, j] * x[:, j]
-                    ny += y[:, j] * y[:, j]
-                cos = acc / (np.sqrt(nx) * np.sqrt(ny))
-            ii = np.array(idx)
-            vals[ii] = cos
-            null[ii] = False
-        return pd.Series(pd.arrays.FloatingArray(vals, null))
-
-    return pair_cos
-
-
 def dot(a: Column, b: Column) -> Column:
     return F.aggregate(
         F.zip_with(a, b, lambda x, y: x.cast("double") * y),
@@ -318,19 +257,6 @@ def brute_force_topk(
     )
 
 
-def hyperplane_bits(vec: Column, planes: list[list[float]]) -> Column:
-    """LSH bucket id: sign bits of dot(vec, plane_i) packed into a long."""
-    bucket = F.lit(0).cast("long")
-    for i, plane in enumerate(planes):
-        proj = dot(vec, F.array(*[F.lit(float(x)) for x in plane]))
-        bucket = bucket.bitwiseOR(
-            F.when(proj > 0, F.shiftleft(F.lit(1).cast("long"), i)).otherwise(
-                F.lit(0).cast("long")
-            )
-        )
-    return bucket
-
-
 def cosine_pairs(
     df: DataFrame,
     id_col: str,
@@ -384,11 +310,11 @@ def cosine_pairs(
 def _bucket_udf(planes, bits: int, tables: int):
     """Vectorized multi-table bucketing: one numpy matmul per Arrow batch.
 
-    The expression form (`hyperplane_bits`) runs bits×tables interpreted
-    zip_with/aggregate dot products per row — fine for a handful of planes
-    (n2 uses 6), ~6× slower than numpy at 48+ planes.  This is exactly the
-    "built-ins can't express it efficiently → Arrow-batched pandas UDF"
-    case; the matmul is (batch × dim) @ (dim × bits·tables).
+    An expression form would run bits×tables interpreted zip_with/
+    aggregate dot products per row — ~6× slower than numpy at 48+
+    planes.  This is exactly the "built-ins can't express it efficiently
+    → Arrow-batched pandas UDF" case; the matmul is (batch × dim) @
+    (dim × bits·tables).
     """
     import numpy as np
     import pandas as pd
@@ -506,13 +432,14 @@ def train_centroids(
     n_centroids: int = 16,
     iters: int = 3,
 ) -> DataFrame:
-    """Spherical k-means (Lloyd) centroid training in pure DataFrame ops.
+    """Spherical k-means (Lloyd) centroid training: kernel assignment,
+    DataFrame means.
 
     Seeds with the ``n_centroids`` lowest-id vectors (deterministic), then
     ``iters`` rounds of assign + update:
 
-    - assign: broadcast the tiny centroid set, ``min_by`` on -cosine — one
-      corpus pass, no shuffle of vectors;
+    - assign: the ``nearest_centroids`` kernel with the tiny centroid set
+      in its closure — one corpus pass, no shuffle of vectors;
     - update: elementwise mean per list via posexplode → groupBy(list, pos)
       avg.  The avg partial-aggregates map-side, so the shuffle carries only
       ~partitions × k × dim rows regardless of corpus size — the same
@@ -540,14 +467,12 @@ def train_centroids(
 
     base = corpus.select(F.col(id_col).alias("__id"), F.col(vec_col).alias("__v"))
     for _ in range(iters):
-        # literal-inlined assignment (r6, see _ranked_lists_expr): each
-        # Lloyd round is a projection + the bounded means aggregate — the
-        # old crossJoin + min_by form paid a corpus-wide exchange per round
-        cent_rows = sorted(cents.items())
+        # closure-shipped assignment (``nearest_centroids``): each Lloyd
+        # round is a projection + the bounded means aggregate — no
+        # crossJoin, no corpus-wide exchange per round
+        nearest = nearest_centroids(sorted(cents.items()), 1)
         assigned = base.select(
-            F.element_at(
-                _ranked_lists_expr("__v", cent_rows, 1), 1
-            )["cid"].alias("list_id"),
+            F.element_at(nearest(F.col("__v")), 1).alias("list_id"),
             F.col("__v").alias("vec"),
         )
         means = (
@@ -604,100 +529,11 @@ def load_ivf_centroids(spark, path: str) -> DataFrame | None:
         return None
 
 
-def _ranked_lists_expr(vec: Column, cent_rows: list, nprobe: int) -> Column:
-    """array<struct<negs,cid>> of the ``nprobe`` nearest centroids for one
-    vector, ranked (cosine DESC, centroid_id ASC) — the centroid table
-    inlined as LITERAL arrays so list selection is a pure per-row
-    projection; extract ``["cid"]`` from the elements.
-
-    This is the point of IVF at 100 TB: centroids are k×dim by definition
-    (driver-small), so neither assignment nor probe ranking should touch a
-    shuffle — the old crossJoin + ``min_by`` form re-aggregated the whole
-    corpus (one exchange carrying every doc's vector in a struct buffer,
-    and ``min_by`` on a struct falls back to SortAggregate, the p6 r4
-    lesson).  Literal inlining deletes that exchange: the only shuffle
-    left in ``ivf_topk`` is the candidate-sized per-probe top-k.  Ties
-    break deterministically on the lower centroid id (the old ``min_by``
-    left ties unspecified); the n2 oracle's (cos DESC, cid) ranking states
-    exactly this order.
-
-    Deliberately free of outer higher-order functions: the ranking stores
-    NEGATED cosine so the default struct ``array_sort`` (ascending by
-    field order) realizes (cos DESC, cid ASC) without a comparator lambda
-    — an outer zip_with/comparator/transform lambda here trips Spark 4's
-    attribute dedup when the result feeds a self-join
-    (INTERNAL_ERROR_ATTRIBUTE_NOT_FOUND; the cosine-internal lambdas are
-    fine).
-
-    ``vec`` may be a plain column NAME (preferred, r14): the whole
-    ranked-lists tree is then built as ONE ``F.expr`` SQL string instead
-    of ~k·dim ``F.lit``/lambda Column constructions — the py4j round
-    trips of the Column route cost 1–2 s PER INVOCATION at k=8, dim=64
-    (measured; it was the bulk of e11's wall time), while the parsed
-    tree is the same expression op for op, so every value is unchanged
-    (double literals are emitted as shortest-repr ``...D`` literals,
-    which Java parses back to the identical IEEE double).  Non-finite
-    centroid cells (no known producer) fall back to the Column route.
-    """
-    if isinstance(vec, str):
-        import math
-
-        if all(
-            math.isfinite(float(x)) for _, v in cent_rows for x in v
-        ):
-            return F.expr(_ranked_lists_sql(f"`{vec}`", cent_rows, nprobe))
-        vec = F.col(vec)
-    scored = F.array(*[
-        F.struct(
-            (-cosine(vec, F.array(*[F.lit(float(x)) for x in v]))).alias(
-                "negs"
-            ),
-            F.lit(int(cid)).cast("bigint").alias("cid"),
-        )
-        for cid, v in cent_rows
-    ])
-    return F.slice(F.array_sort(scored), 1, nprobe)
-
-
-def _ranked_lists_sql(vec_sql: str, cent_rows: list, nprobe: int) -> str:
-    """The ``_ranked_lists_expr`` tree as one SQL string — the SAME
-    zip_with/aggregate/transform cosine expressions (identical math, so
-    identical doubles), one parser call instead of thousands of py4j
-    constructions."""
-
-    def d(x: float) -> str:
-        return repr(float(x)) + "D"
-
-    def cos_sql(v: list) -> str:
-        arr = "array(" + ", ".join(d(x) for x in v) + ")"
-        dot = (
-            f"aggregate(zip_with({vec_sql}, {arr}, "
-            "(x, y) -> CAST(x AS DOUBLE) * y), 0.0D, (acc, x) -> acc + x)"
-        )
-        nv = (
-            f"sqrt(aggregate(transform({vec_sql}, "
-            "x -> CAST(x AS DOUBLE) * x), 0.0D, (acc, x) -> acc + x))"
-        )
-        nl = (
-            f"sqrt(aggregate(transform({arr}, "
-            "x -> CAST(x AS DOUBLE) * x), 0.0D, (acc, x) -> acc + x))"
-        )
-        return f"({dot} / ({nv} * {nl}))"
-
-    structs = ", ".join(
-        f"named_struct('negs', -{cos_sql(v)}, "
-        f"'cid', CAST({int(cid)} AS BIGINT))"
-        for cid, v in cent_rows
-    )
-    return f"slice(array_sort(array({structs})), 1, {int(nprobe)})"
-
-
 def _collect_centroids(cent: DataFrame) -> list:
     rows = cent.collect()
     if not rows:
-        # an empty centroid table would make _ranked_lists_expr build a
-        # zero-arg F.array(), every assignment NULL, and ivf_topk silently
-        # return no rows — fail loudly instead (ADVICE r6)
+        # an empty centroid table would leave every vector without a list
+        # and ivf_topk silently returning no rows — fail loudly instead
         raise ValueError(
             "IVF centroid table is empty — build_ivf_index produced no "
             "centroids (empty corpus?) or the wrong path was loaded"
@@ -708,45 +544,81 @@ def _collect_centroids(cent: DataFrame) -> list:
     )
 
 
-def _ranked_lists_udf(cent_rows: list, nprobe: int):
-    """Arrow-batched twin of ``_ranked_lists_expr`` for PRODUCTION
-    centroid counts (r6 verdict #8): the literal form inlines k×dim
-    float literals into the expression tree, which is ideal up to a few
-    thousand literals (k=16, dim=64 → 1 k) but blows up Catalyst tree
-    walks and codegen as k grows; past ``IVF_LITERAL_MAX_CELLS`` cells
-    the same ranking runs as ONE numpy matmul per Arrow batch
-    ((batch × dim) @ (dim × k), argsort row-wise) — still a pure
-    projection over the scan, still shuffle-free, the ``_bucket_udf``
-    pattern.  Ranking order matches the expression form exactly:
-    cosine DESC, centroid_id ASC (stable argsort over cid-ordered
-    columns).  Returns array<bigint> of the nprobe nearest cids."""
+def nearest_centroids(cent_rows: list, nprobe: int):
+    """The one nearest-centroid kernel: a scalar Arrow UDF mapping a vector
+    column to array<bigint> — the ``nprobe`` nearest centroid ids ranked
+    (cosine DESC, centroid_id ASC).  Every IVF-family call site (``ivf_topk``
+    assignment and probe lists, each ``train_centroids`` Lloyd round,
+    ``semantic_dedup_pairs``, ``embed.cluster_assign``) ranks through it.
+
+    Centroids are k×dim by definition (driver-small), so they ride in the
+    closure and assignment is a pure projection over the scan — no
+    crossJoin, no corpus-wide exchange.  Per Arrow batch the scores are
+    ``fold_cosine_block`` against the cid-sorted centroid matrix, so every
+    cosine is bit-identical to the ``cosine()`` expression, and a stable
+    argsort of the negated scores breaks exact ties on the lower
+    centroid id (NaN ranks last, -0.0 ties 0.0 — Spark's ordering).
+
+    Contract:
+
+    - ``cent_rows`` (cid-sorted (cid, vector) pairs, ``_collect_centroids``)
+      is validated here, before any job runs: ragged dims and centroids
+      with a zero or non-finite norm (NaN/inf cells) raise ``ValueError``;
+    - a NULL vector ranks nowhere — NULL out (no list, no cluster);
+    - a vector of the wrong length, or whose norm is zero or non-finite
+      (NULL/NaN/inf cells, under/overflow), fails the task with
+      ``ValueError`` — never a silent ranking of NaN scores."""
     import numpy as np
     import pandas as pd
     from pyspark.sql.functions import pandas_udf
 
     globals()["pd"] = pd
 
+    dims = {len(v) for _, v in cent_rows}
+    if len(dims) != 1:
+        raise ValueError(f"centroid rows have mixed dimensions {sorted(dims)}")
     cids = np.array([c for c, _ in cent_rows], dtype=np.int64)
     cmat = np.array([v for _, v in cent_rows], dtype=np.float64)
-    cn = cmat / np.linalg.norm(cmat, axis=1, keepdims=True)
-    take = min(nprobe, len(cent_rows))
+    cnorm = fold_norms(cmat)  # NaN/inf for any non-finite cell
+    bad = ~((cnorm > 0) & np.isfinite(cnorm))
+    if bad.any():
+        raise ValueError(
+            f"centroids {cids[bad].tolist()} have a zero or non-finite norm "
+            "— cosine to them is undefined"
+        )
+    dim = cmat.shape[1]
+    take = min(nprobe, len(cids))
 
     @pandas_udf("array<bigint>")
     def ranked(v: pd.Series) -> pd.Series:
-        x = np.vstack(v.to_numpy()).astype(np.float64)
-        nrm = np.maximum(np.linalg.norm(x, axis=1, keepdims=True), 1e-300)
-        cos = (x / nrm) @ cn.T
+        vals = v.to_numpy()
+        live = [i for i, x in enumerate(vals) if x is not None]
+        out = [None] * len(vals)
+        if not live:
+            return pd.Series(out, dtype=object)
+        if any(len(vals[i]) != dim for i in live):
+            raise ValueError(
+                "nearest_centroids: vector length differs from the "
+                f"centroid dimension {dim}"
+            )
+        x = np.vstack([vals[i] for i in live]).astype(np.float64)
+        xnorm = fold_norms(x)
+        if not ((xnorm > 0) & np.isfinite(xnorm)).all():
+            raise ValueError(
+                "nearest_centroids: zero-norm or non-finite vector — "
+                "cosine to a centroid is undefined"
+            )
+        cos = fold_cosine_block(x, cmat, cnorm)
         order = np.argsort(-cos, axis=1, kind="stable")[:, :take]
-        return pd.Series(list(cids[order]))
+        for i, row in zip(live, cids[order]):
+            out[i] = row
+        return pd.Series(out, dtype=object)
 
-    return ranked
-
-
-# literal inlining comfort bound: k×dim cells in the expression tree.
-# 16×64 (the gate config) is 1 k cells — fine; production k≥1024 at
-# dim 64 is 65 k+ literals, where analysis/codegen time dominates —
-# switch to the numpy assignment there.
-IVF_LITERAL_MAX_CELLS = 50_000
+    # declared nondeterministic only so the optimizer cannot copy the call
+    # into a pushed-down filter: a join on the list id infers
+    # isnotnull(list_id), and pushing it below the projection would run
+    # the kernel twice per corpus row (two ArrowEvalPython passes)
+    return ranked.asNondeterministic()
 
 
 def ivf_topk(
@@ -760,7 +632,6 @@ def ivf_topk(
     nprobe: int = 4,
     train_iters: int = 0,
     centroids: DataFrame | None = None,
-    assign_via: str = "auto",
 ) -> DataFrame:
     """IVF-style ANN: partition the corpus into centroid lists, search only
     the ``nprobe`` nearest lists per probe.
@@ -771,18 +642,12 @@ def ivf_topk(
     ``train_iters>0`` Lloyd rounds inline (``train_centroids``, test/dev
     convenience); else the deterministic training-free seed (the
     ``n_centroids`` lowest-id vectors).  The query-side plan is identical
-    in all three cases and (since r6) shuffle-free until the final
-    per-probe top-k: the centroid table rides into every task as literal
-    arrays (``_ranked_lists_expr``), so list assignment is a projection
-    over the corpus scan — no crossJoin, no corpus-wide aggregation
-    exchange — and candidates come from one broadcast join of the (tiny)
-    probe-list table against the assigned scan.
-
-    ``assign_via``: 'literal' (expression inlining), 'numpy' (Arrow-
-    batched matmul — same ranking, same shuffle-free shape, for
-    production centroid counts), or 'auto' (default): literal while
-    k×dim ≤ ``IVF_LITERAL_MAX_CELLS``, numpy beyond.  Both variants are
-    pinned identical on a planted config in tests.
+    in all three cases and shuffle-free until the final per-probe top-k:
+    the centroid table rides into every task in the ``nearest_centroids``
+    kernel closure, so list assignment is a projection over the corpus
+    scan — no crossJoin, no corpus-wide aggregation exchange — and
+    candidates come from one broadcast join of the (tiny) probe-list
+    table against the assigned scan.  A NULL vector belongs to no list.
     """
     if centroids is not None:
         cent = centroids
@@ -797,45 +662,20 @@ def ivf_topk(
             )
         )
     cent_rows = _collect_centroids(cent)
-    if assign_via not in ("auto", "literal", "numpy"):
-        # a silent fallthrough to 'literal' on a typo would inline k×dim
-        # float literals into the expression tree — the exact blow-up the
-        # parameter exists to avoid
-        raise ValueError(
-            f"assign_via must be 'auto', 'literal' or 'numpy', got {assign_via!r}"
-        )
-    if assign_via == "auto":
-        cells = len(cent_rows) * len(cent_rows[0][1])
-        assign_via = "literal" if cells <= IVF_LITERAL_MAX_CELLS else "numpy"
-    if assign_via == "numpy":
-        r1 = _ranked_lists_udf(cent_rows, 1)
-        rp = _ranked_lists_udf(cent_rows, nprobe)
-        assigned = corpus.select(
-            F.col(id_col).alias("neighbor_id"),
-            F.col(vec_col).alias("__cvec"),
-        ).withColumn("list_id", F.element_at(r1(F.col("__cvec")), 1))
-        probe_lists = probes.select(
-            F.col(probe_id_col).alias("probe_id"),
-            F.col(vec_col).alias("__pvec"),
-            F.explode(rp(F.col(vec_col))).alias("list_id"),
-        )
-    else:
-        assigned = corpus.select(
-            F.col(id_col).alias("neighbor_id"),
-            F.col(vec_col).alias("__cvec"),
-        ).withColumn(
-            "list_id",
-            F.element_at(
-                _ranked_lists_expr("__cvec", cent_rows, 1), 1
-            )["cid"],
-        )
-        probe_lists = probes.select(
-            F.col(probe_id_col).alias("probe_id"),
-            F.col(vec_col).alias("__pvec"),
-            F.explode(
-                _ranked_lists_expr(vec_col, cent_rows, nprobe)
-            ).alias("__rl"),
-        ).select("probe_id", "__pvec", F.col("__rl")["cid"].alias("list_id"))
+    assigned = corpus.select(
+        F.col(id_col).alias("neighbor_id"),
+        F.col(vec_col).alias("__cvec"),
+    ).withColumn(
+        "list_id",
+        F.element_at(nearest_centroids(cent_rows, 1)(F.col("__cvec")), 1),
+    )
+    probe_lists = probes.select(
+        F.col(probe_id_col).alias("probe_id"),
+        F.col(vec_col).alias("__pvec"),
+        F.explode(nearest_centroids(cent_rows, nprobe)(F.col(vec_col))).alias(
+            "list_id"
+        ),
+    )
     scored = (
         assigned.join(F.broadcast(probe_lists), "list_id")
         .where(F.col("neighbor_id") != F.col("probe_id"))
@@ -982,27 +822,24 @@ def semantic_dedup_pairs(
 
     ``centroids`` is a (centroid_id, __cent) table — the materialized
     ``build_ivf_index`` output in production, or the deterministic seed
-    table for the SQL-twinned gate entry.  Plan shape (r6, same rewrite
-    as ``ivf_topk``): the k×dim centroid table is inlined as literal
-    arrays, so assignment is a pure projection over the scan — no
-    crossJoin, no corpus-wide argmax exchange; candidate generation
-    shuffles only (id, list_id); vectors are joined back ONLY for
-    surviving candidate pairs, then re-checked with the exact numpy
-    pair cosine.  Returns (id_a, id_b, list_id, cosine) pairs at or above
-    ``threshold``; keep-policy (e.g. lowest id wins) is the caller's.
+    table for the SQL-twinned gate entry.  Plan shape (same as
+    ``ivf_topk``): assignment is the ``nearest_centroids`` kernel, a pure
+    projection over the scan — no crossJoin, no corpus-wide argmax
+    exchange; candidate generation shuffles only (id, list_id); vectors
+    are joined back ONLY for surviving candidate pairs, then re-checked
+    with the exact numpy pair cosine.  A NULL vector has no cluster and
+    pairs with nothing.  Returns (id_a, id_b, list_id, cosine) pairs at
+    or above ``threshold``; keep-policy (e.g. lowest id wins) is the
+    caller's.
     """
     base = df.select(F.col(id_col).alias("id"), F.col(vec_col).alias("__v"))
-    cent_rows = _collect_centroids(centroids)
+    nearest = nearest_centroids(_collect_centroids(centroids), 1)
     assigned = base.select(
-        "id",
-        F.element_at(
-            _ranked_lists_expr("__v", cent_rows, 1), 1
-        )["cid"].alias("list_id"),
-    )
+        "id", F.element_at(nearest(F.col("__v")), 1).alias("list_id")
+    ).where(F.col("list_id").isNotNull())
     # per-cluster pair expansion via dedup.capped_bucket_pairs (r7):
-    # row-level cap window, then local C(m,2) expansion — no self-join
-    # (which r6's lambda-free _ranked_lists_expr rewrite existed to keep
-    # safe), and duplicate-id inputs cannot emit (x, x) self-pairs
+    # row-level cap window, then local C(m,2) expansion — no self-join,
+    # and duplicate-id inputs cannot emit (x, x) self-pairs
     from ago_sisdb_spark.operators.dedup import capped_bucket_pairs
 
     cand = capped_bucket_pairs(

@@ -158,11 +158,11 @@ def test_ivf_index_materialize_roundtrip(spark, emb, tmp_path):
     assert sorted(map(tuple, served.collect())) == sorted(
         map(tuple, inline.collect())
     )
-    # r6 serve shape: the k x dim index is inlined as literals, so the
-    # query plan must contain NO assignment machinery at all — no
-    # crossJoin against a centroid relation, no min_by SortAggregate, no
-    # corpus-wide exchange before the candidate join (the only exchange
-    # left is the per-probe top-k)
+    # serve shape: the k x dim index rides in the nearest_centroids
+    # kernel closure, so the query plan must contain NO assignment
+    # machinery at all — no crossJoin against a centroid relation, no
+    # min_by SortAggregate, no corpus-wide exchange before the candidate
+    # join (the only exchange left is the per-probe top-k)
     plan = served._jdf.queryExecution().optimizedPlan().toString()
     assert "min_by" not in plan and "Join Cross" not in plan
     executed = (
@@ -323,43 +323,235 @@ def test_ann_recall_floor_all_sfs(spark, sf_dir):
     assert sum(by_method["lsh"]) / 5 >= 0.8, by_method["lsh"]
 
 
-def test_ivf_assignment_variants_identical_and_shuffle_free(spark):
-    """r6 verdict #8: the numpy (Arrow matmul) assignment must reproduce
-    the literal-inlined assignment byte-for-byte on a planted config, and
-    its corpus side must stay a pure projection — ArrowEvalPython over
-    the scan with no Exchange before the per-probe top-k."""
+def _ranked_lists_sql_reference(vec_sql: str, cent_rows: list, nprobe: int) -> str:
+    """The retired literal-expression IVF ranking, kept verbatim as the
+    reference ``nearest_centroids`` is pinned against: every centroid
+    inlined as a literal array, cosine as interpreted zip_with/aggregate
+    folds, ranked by ``array_sort`` over (negated cosine, cid) structs —
+    (cosine DESC, centroid_id ASC)."""
+
+    def d(x: float) -> str:
+        return repr(float(x)) + "D"
+
+    def cos_sql(v: list) -> str:
+        arr = "array(" + ", ".join(d(x) for x in v) + ")"
+        dot = (
+            f"aggregate(zip_with({vec_sql}, {arr}, "
+            "(x, y) -> CAST(x AS DOUBLE) * y), 0.0D, (acc, x) -> acc + x)"
+        )
+        nv = (
+            f"sqrt(aggregate(transform({vec_sql}, "
+            "x -> CAST(x AS DOUBLE) * x), 0.0D, (acc, x) -> acc + x))"
+        )
+        nl = (
+            f"sqrt(aggregate(transform({arr}, "
+            "x -> CAST(x AS DOUBLE) * x), 0.0D, (acc, x) -> acc + x))"
+        )
+        return f"({dot} / ({nv} * {nl}))"
+
+    structs = ", ".join(
+        f"named_struct('negs', -{cos_sql(v)}, "
+        f"'cid', CAST({int(cid)} AS BIGINT))"
+        for cid, v in cent_rows
+    )
+    return f"slice(array_sort(array({structs})), 1, {int(nprobe)})"
+
+
+def test_nearest_centroids_matches_literal_reference(spark):
+    """The one nearest-centroid kernel reproduces the retired literal SQL
+    ranking exactly — the FULL k-way ranking of every row, on double and
+    float32 columns.  Planted: negative and scientific-notation centroid
+    cells, a duplicated centroid and an exact power-of-two scaled copy
+    (exact cosine ties, broken on the lower cid), rows that are exact /
+    negated / scaled copies of centroids, and sums of two mirrored
+    centroids (an exact tie between the pair)."""
     import numpy as np
 
-    rnd = np.random.RandomState(7)
-    dim = 8
-    vecs = [
-        (int(i), [float(x) for x in rnd.randn(dim)]) for i in range(120)
-    ]
-    df = spark.createDataFrame(vecs, "vec_id long, embedding array<double>")
-    probes = df.where(F.col("vec_id") < 3)
+    rnd = np.random.RandomState(31)
+    dim, k = 16, 12
+    cmat = rnd.randn(k, dim)
+    cmat[1, :4] = [1.25e-07, -3.5e-05, 2.5e05, -7.75e-12]  # sci notation
+    cmat[4] = cmat[2]  # duplicate centroid: exact tie, cid 2 wins
+    cmat[6] = 2.0 * cmat[3]  # exact scaled copy: exact tie, cid 3 wins
+    cmat[7] = 3.0 * cmat[5]  # inexact scaled copy
+    cmat[8] = np.r_[[1.0, 2.0], np.zeros(dim - 2)]
+    cmat[9] = np.r_[[2.0, 1.0], np.zeros(dim - 2)]  # mirror of cid 8
+    cent_rows = [(int(c), [float(x) for x in cmat[c]]) for c in range(k)]
+    rows = [rnd.randn(dim) * 10.0 ** rnd.uniform(-3, 3) for _ in range(150)]
+    for c in range(k):
+        rows += [cmat[c], -cmat[c], 4.0 * cmat[c], 3.0 * cmat[c]]
+    rows += [cmat[8] + cmat[9], cmat[2] + cmat[3], cmat[0] + cmat[1]]
+    df = spark.createDataFrame(
+        [(i, [float(x) for x in v]) for i, v in enumerate(rows)],
+        "id long, v array<double>",
+    ).withColumn("f", F.col("v").cast("array<float>"))
+    kernel = similarity.nearest_centroids(cent_rows, k)
+    for col in ("v", "f"):
+        got = df.select(
+            "id",
+            kernel(F.col(col)).alias("kern"),
+            F.expr(_ranked_lists_sql_reference(f"`{col}`", cent_rows, k))
+            .alias("ref"),
+        ).collect()
+        assert len(got) == len(rows)
+        for r in got:
+            assert list(r.kern) == [s.cid for s in r.ref], (col, r.id)
+    ties = {
+        r.id: list(r.kern)
+        for r in df.select("id", kernel(F.col("v")).alias("kern")).collect()
+    }
+    assert ties[150 + 4 * 4][:2] == [2, 4]  # copy of the duplicated centroid
+    assert ties[150 + 4 * 6][:2] == [3, 6]  # copy of the scaled centroid
+    assert ties[150 + 4 * k][:2] == [8, 9]  # cid 8 + its mirror
 
-    lit = similarity.ivf_topk(
-        df, probes, "vec_id", "embedding", "vec_id", k=5,
-        n_centroids=8, nprobe=3, train_iters=1, assign_via="literal",
+
+def test_nearest_centroid_call_sites_run_the_arrow_kernel(spark, monkeypatch):
+    """Plan guard: every nearest-centroid call site ranks through the
+    ArrowEvalPython kernel, with no interpreted zip_with fold in the
+    assignment projection.  ivf_topk keeps one zip_with — the exact
+    candidate re-rank ``cosine(__cvec, __pvec)`` — and nothing else."""
+    import re
+
+    import numpy as np
+
+    from ago_sisdb_spark.operators import embed
+
+    rnd = np.random.RandomState(7)
+    df = spark.createDataFrame(
+        [(i, [float(x) for x in rnd.randn(8)]) for i in range(120)],
+        "vec_id long, embedding array<double>",
     )
-    npv = similarity.ivf_topk(
-        df, probes, "vec_id", "embedding", "vec_id", k=5,
-        n_centroids=8, nprobe=3, train_iters=1, assign_via="numpy",
+
+    def executed(frame):
+        frame.collect()
+        plan = frame._jdf.queryExecution().executedPlan().toString()
+        return plan.split("== Initial Plan ==")[0]  # AQE prints it twice
+
+    ivf = executed(similarity.ivf_topk(
+        df, df.where(F.col("vec_id") < 3), "vec_id", "embedding", "vec_id",
+        k=5, n_centroids=8, nprobe=3,
+    ))
+    # one kernel pass per side: the join's inferred isnotnull(list_id)
+    # must not copy the kernel into a second pass below the projection
+    assert ivf.count("ArrowEvalPython") == 2
+    second_args = re.findall(r"zip_with\([^,]+, ([^,]+),", ivf)
+    assert second_args and all(a.startswith("__pvec") for a in second_args)
+
+    ca = executed(embed.cluster_assign(df, "vec_id", "embedding", 8))
+    assert "ArrowEvalPython" in ca and "zip_with(" not in ca
+
+    plans = []
+    collect = type(df).collect
+
+    def spy(self):
+        out = collect(self)
+        plans.append(self._jdf.queryExecution().executedPlan().toString())
+        return out
+
+    monkeypatch.setattr(type(df), "collect", spy)
+    similarity.train_centroids(df, "vec_id", "embedding", 8, iters=2)
+    rounds = [p for p in plans if "ArrowEvalPython" in p]
+    assert len(rounds) == 2
+    assert not any("zip_with(" in p for p in plans)
+
+
+def test_null_vector_joins_no_list_or_cluster(spark):
+    """A NULL embedding has no nearest centroid: cluster_assign gives it a
+    NULL cluster, ivf_topk files it under no list, and semantic dedup
+    pairs it with nothing (the literal ranking used to file it under
+    centroid 0)."""
+    from ago_sisdb_spark.operators import embed
+
+    df = spark.createDataFrame(
+        [(0, [1.0, 0.0]), (1, [0.0, 1.0]), (2, None), (3, [0.9, 0.1]),
+         (4, [0.2, 0.8]), (5, None)],
+        "vec_id long, embedding array<double>",
     )
-    lr = sorted((r.probe_id, r.neighbor_id, round(r.score, 12))
-                for r in lit.collect())
-    nr = sorted((r.probe_id, r.neighbor_id, round(r.score, 12))
-                for r in npv.collect())
-    assert lr == nr and len(lr) == 15
-    plan = npv._jdf.queryExecution().executedPlan().toString()
-    assert "ArrowEvalPython" in plan
-    # auto mode picks literal at gate scale (k*dim tiny)
-    auto = similarity.ivf_topk(
-        df, probes, "vec_id", "embedding", "vec_id", k=5,
-        n_centroids=8, nprobe=3, train_iters=1,
+    cents = spark.createDataFrame(
+        [(0, [1.0, 0.0]), (1, [0.0, 1.0])],
+        "centroid_id bigint, __cent array<double>",
     )
-    aplan = auto._jdf.queryExecution().optimizedPlan().toString()
-    assert "ArrowEvalPython" not in aplan and "pythonUDF" not in aplan.lower()
+    clusters = {
+        r.vec_id: r.cluster
+        for r in embed.cluster_assign(
+            df, "vec_id", "embedding", centroids=cents
+        ).collect()
+    }
+    assert clusters == {0: 0, 1: 1, 2: None, 3: 0, 4: 1, 5: None}
+    ivf = similarity.ivf_topk(
+        df, df.where(F.col("vec_id") == 3), "vec_id", "embedding", "vec_id",
+        k=10, nprobe=1, centroids=cents,
+    )
+    assert {r.neighbor_id for r in ivf.collect()} == {0}
+    pairs = similarity.semantic_dedup_pairs(
+        df, "vec_id", "embedding", cents, -1.0
+    ).collect()
+    assert {(r.id_a, r.id_b) for r in pairs} == {(0, 3), (1, 4)}
+
+
+@pytest.mark.parametrize(
+    "cell", [0.0, float("nan"), float("inf")], ids=["zero", "nan", "inf"]
+)
+def test_degenerate_centroids_raise_before_any_job(spark, cell):
+    """Centroid rows are validated once, where the kernel is built: a
+    zero-norm or non-finite centroid raises ValueError on the driver
+    before the assignment job is planned, on every call site."""
+    from ago_sisdb_spark.operators import embed
+
+    df = spark.createDataFrame(
+        [(0, [1.0, 0.0]), (1, [0.0, 1.0])],
+        "vec_id long, embedding array<double>",
+    )
+    cents = spark.createDataFrame(
+        [(0, [1.0, 0.0]), (1, [cell, 0.0])],
+        "centroid_id bigint, __cent array<double>",
+    )
+    match = r"centroids \[1\] have a zero or non-finite norm"
+    with pytest.raises(ValueError, match=match):
+        similarity.nearest_centroids([(0, [1.0, 0.0]), (1, [cell, 0.0])], 1)
+    with pytest.raises(ValueError, match=match):
+        similarity.ivf_topk(
+            df, df, "vec_id", "embedding", "vec_id", k=1, centroids=cents
+        )
+    with pytest.raises(ValueError, match=match):
+        embed.cluster_assign(df, "vec_id", "embedding", centroids=cents)
+    with pytest.raises(ValueError, match=match):
+        similarity.semantic_dedup_pairs(df, "vec_id", "embedding", cents, 0.5)
+
+
+def test_ragged_centroids_raise():
+    """Centroid rows of mixed length (a corrupt or mismatched index) are
+    rejected when the kernel is built."""
+    with pytest.raises(ValueError, match="mixed dimensions"):
+        similarity.nearest_centroids([(0, [1.0, 0.0]), (1, [1.0])], 1)
+
+
+@pytest.mark.parametrize(
+    "vec, match",
+    [([0.0, 0.0], "zero-norm or non-finite vector"),
+     ([1e-200, 0.0], "zero-norm or non-finite vector"),
+     ([float("nan"), 1.0], "zero-norm or non-finite vector"),
+     ([1.0, 0.0, 0.0], "vector length differs")],
+    ids=["zero", "underflow", "nan_cell", "wrong_dim"],
+)
+def test_degenerate_input_vector_fails_the_job(spark, vec, match):
+    """A zero-norm input vector has no cosine to any centroid: the job
+    fails (as the ANSI expression form did with DIVIDE_BY_ZERO) instead
+    of ranking NaN scores; a NaN cell or a vector of the wrong length
+    fails the same way."""
+    from ago_sisdb_spark.operators import embed
+
+    df = spark.createDataFrame(
+        [(0, [1.0, 0.0]), (1, vec)], "vec_id long, embedding array<double>"
+    )
+    cents = spark.createDataFrame(
+        [(0, [1.0, 0.0]), (1, [0.0, 1.0])],
+        "centroid_id bigint, __cent array<double>",
+    )
+    with pytest.raises(Exception, match=match):
+        embed.cluster_assign(
+            df, "vec_id", "embedding", centroids=cents
+        ).collect()
 
 
 def test_cosine_lsh_duplicate_ids_no_self_pairs(spark):
@@ -1054,45 +1246,6 @@ def test_ann_recall_floor_clustered(spark):
         ]
         assert len(recalls) == 8, name
         assert sum(recalls) / len(recalls) >= 0.9, (name, recalls)
-
-
-def test_pair_cosine_exact_matches_expression(spark):
-    """pair_cosine_exact is the Arrow pair-scoring tool for plans whose
-    candidate counts measurably dominate (millions of rows/task); it must
-    match the ``cosine()`` expression bit-for-bit, including NULL on
-    null/length-mismatched inputs and NaN on degenerate norms.  (The
-    r13 A/B measured it a 1.7–2.2× REGRESSION on the bounded rerank
-    paths, so no production plan uses it today — the test keeps the tool
-    honest for the plan that one day needs it.)"""
-    import math
-
-    rows = [
-        (1, [1.0, 2.0, 3.0], [4.0, 5.0, 6.0]),
-        (2, [1.0, 2.0], [4.0, 5.0, 6.0]),          # length mismatch
-        (3, None, [1.0, 2.0, 3.0]),                 # null side
-        (4, [0.1234567, 0.7654321, -0.5, 0.25], [0.9, -0.8, 0.7, -0.6]),
-        (5, [1e-200, 2e-200, 3e-200], [1e200, 2e200, -3e200]),  # NaN norms
-    ]
-    df = spark.createDataFrame(rows, "id long, a array<double>, b array<double>")
-    expr = {
-        r.id: r.c
-        for r in df.select(
-            "id", similarity.cosine(F.col("a"), F.col("b")).alias("c")
-        ).collect()
-    }
-    udf = {
-        r.id: r.c
-        for r in df.select(
-            "id",
-            similarity.pair_cosine_exact()(F.col("a"), F.col("b")).alias("c"),
-        ).collect()
-    }
-    assert set(expr) == set(udf)
-    for i in expr:
-        e, u = expr[i], udf[i]
-        assert (e == u) or (
-            e is not None and u is not None and math.isnan(e) and math.isnan(u)
-        ), (i, e, u)
 
 
 def test_fold_kernels_bit_identical_random_batch(spark):

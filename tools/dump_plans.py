@@ -21,7 +21,7 @@ NOTES = {
     "t15_cms_counts": "sketch cells partial-aggregate map-side (<= depth*width rows per task shuffle); the depth*width-bounded sketch is broadcast into the probe join",
     "pipe6_dsir": "two fixed-size (4096-bucket) count aggregates broadcast back into ONE scoring pass; no vocabulary table, no corpus x corpus join; r7 continuation: the bucket tables are materialized and totals derive from them (5 -> 3 corpus passes)",
     "pipe_full_prep": "headline since r6: digest window -> pair-free MinHash drop set (bucket-min window) -> raw-corpus shingle decontam (r7: single-consumer branches, nothing in the keep chain executes twice) -> expression gates -> per-shard packing windows, ONE composed plan; no collect, no cross join, every anti-join side bounded (AQE broadcasts the drop lists)",
-    "n4_knn_ivf": "materialized-index serve path (r6 shape): the trained k x dim centroid table is read back and inlined as LITERAL arrays, so list assignment is a projection over the scan — no crossJoin, no min_by aggregation exchange; the only shuffle is the per-probe top-k",
+    "n4_knn_ivf": "materialized-index serve path: the trained k x dim centroid table is read back and rides in the nearest_centroids kernel closure (ArrowEvalPython, fold-exact cosine, bit-identical to the old literal ranking), so list assignment is a projection over the scan — no crossJoin, no min_by aggregation exchange; the only shuffle is the per-probe top-k",
     "pipe8_incremental_prep": "incremental daily-ingest shape (r7): the ONLY documents scans carry the batch predicate (doc_id % 3 = 0 in PushedFilters) — history enters solely as three artifact parquet scans (digest set, band index, shards-sized pack_state); per-batch cost is batch + index probe, never a history scan",
     "s5_global_shuffle": "training-order shuffle (r7): ONE exchange on the shard key feeding a per-shard WindowExec rank — no global sort, no single-partition window; shard count is layout so 1000 executors each sort shard-sized runs",
     "s7_training_shards": "training-corpus sink manifest (r7): the write ran before this plan (repartition-by-shard + in-task sort + partitionBy, its one shuffle); the manifest scan reads ONLY tokens+bin (payloads pruned, ReadSchema) + the shard partition column, two-phase distinct aggregate, all codegen",
@@ -45,7 +45,7 @@ NOTES = {
     "t38_char_entropy": "per-doc character entropy (r10): explode characters -> ONE (doc, char) count aggregate; the per-doc total is a window over the SAME doc partitioning (no second exchange) and the final per-doc entropy sum is one more aggregate on the already-partitioned frame — two logical shuffles total, rows bounded by alphabet-size x docs",
     "e9_semantic_decontam": "embedding-space decontamination (r10): the bounded eval set broadcasts (BroadcastNestedLoopJoin, LEFT so an empty eval set degrades to contaminated=false rather than annihilating the corpus — r11 fix); per-corpus-vector max cosine is a map-side-combined aggregate over |eval| candidates; the corpus never exchanges — the only admissible shape at 100 TB",
     "e10_bitext_mining": "margin-based bitext mining (r11; r12 collapse-point pin; r13 exact-fold vectorization): the bounded src side rides every task in the kernel CLOSURE — the tgt corpus is ONE scan feeding a MapInPandas node that scores each Arrow batch against the src matrix with the exact-fold numpy block (bit-identical to the old expression tree) and emits only batch-local top-k partials (<= partitions*|src|*k rows), so no cross join exists in the plan at all; the forward top-k window reduces the partials and is eagerly materialized (Scan ExistingRDD below); the backward-kNN pass is a second MapInPandas over the bounded candidate frame emitting final per-candidate integer top-k sums (row-local, tie-invariant); margins are integer arithmetic + one integral-divide in codegen; 10.5 -> 2.5 s at sf0.1",
-    "e11_cluster_balance": "embedding-cluster diversity rebalancing (r11): centroid assignment is a LITERAL-expression projection over the scan (no crossJoin, no assignment shuffle — the IVF inlining; r14: the literal tree is built as ONE F.expr SQL parse instead of ~k*dim py4j Column constructions — 1.3 s of per-invocation driver time gone, values bit-identical); pass 1 is the clusters-sized mass aggregate (map-side combined, checkpointed), the integer quota plan broadcasts into pass 2's portable-hash gate + kept-count aggregate — two corpus passes by construction, no corpus-wide shuffle",
+    "e11_cluster_balance": "embedding-cluster diversity rebalancing (r11): centroid assignment is the nearest_centroids ArrowEvalPython projection over the scan (no crossJoin, no assignment shuffle, no k*dim literal tree to parse; values bit-identical to the old literal ranking); pass 1 is the clusters-sized mass aggregate (map-side combined, checkpointed), the integer quota plan broadcasts into pass 2's portable-hash gate + kept-count aggregate — two corpus passes by construction, no corpus-wide shuffle",
     "e12_bitext_bucketed": "SYMMETRIC bucketed bitext mining (r11; r12 occupancy cap + chained-window restructure): neither side broadcasts — each exchanges ONCE on (band, key) of the sign sketch (Generate/posexplode of 4 band keys in the scan stage, bands-x replication of (id, vec) rows); each side's bucket membership is capped at 1000 by a count WINDOW that shares the join's own (band, key) hash partitioning (cap_bucket_fanout adds no extra exchange); the bucket join is a plain shuffled equi join; lowest-shared-band dedup is a window over the pair key; the neighborhood sums CHAIN onto the same src/tgt window exchanges that compute the ranks (rank + rank-gated sum/count per Window group — pre-r12 the sumx/sumy groupBys + pair join re-executed the whole candidate lineage three times, the r7 two-consumer trap; dupscan embeddings:6 -> clean) — the large-x-large shape where e10's broadcast is impossible",
 }
 
