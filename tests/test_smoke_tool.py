@@ -9,6 +9,8 @@ import os
 import sys
 import textwrap
 
+import pytest
+
 sys.path.insert(0, os.path.join(os.path.dirname(__file__), "..", "tools"))
 
 import smoke_compile  # noqa: E402
@@ -72,10 +74,22 @@ def test_analyze_all_catches_broken_entry(spark, monkeypatch):
     assert len(failures) == 1 and "broken_probe" in failures[0], failures
 
 
+_HOOKS_DIR = os.path.join(os.path.dirname(__file__), "..", ".git", "hooks")
+
+
+@pytest.mark.skipif(
+    not os.path.isdir(_HOOKS_DIR),
+    reason="no .git/hooks directory (sdist or git worktree): "
+    "ensure_hooks has nowhere to install",
+)
 def test_pre_commit_hook_installed():
-    hook = os.path.join(
-        os.path.dirname(__file__), "..", ".git", "hooks", "pre-commit"
-    )
+    """Run the tracked installer with its default root, as tools/run_all.py
+    does before its stages, then check the live hook of this checkout.
+    `.git/hooks/` is untracked, so a fresh clone has no hook until then."""
+    from install_hooks import ensure_hooks
+
+    ensure_hooks()
+    hook = os.path.join(_HOOKS_DIR, "pre-commit")
     assert os.path.isfile(hook) and os.access(hook, os.X_OK)
     with open(hook) as f:
         assert "smoke_compile" in f.read()

@@ -3,9 +3,11 @@
 `.git/hooks/` is not tracked by git, so the pre-commit smoke hook written
 in round 8 silently disappears whenever the working copy is re-cloned or
 its `.git` dir reset — exactly the failure class the hook exists to stop
-(the r7 untested-snapshot NameError).  This installer is tracked, and
-`tools/run_all.py` calls :func:`ensure_hooks` on every run, so the first
-validate after any reset self-heals the hook.
+(the r7 untested-snapshot NameError).  This installer is tracked;
+run_all and the tier-1 suite self-heal the hook: `tools/run_all.py` calls
+:func:`ensure_hooks` on every run, and so does
+`tests/test_smoke_tool.py::test_pre_commit_hook_installed`, so the first
+validate or pytest run after any reset reinstalls it.
 
 The hook runs ``tools/smoke_compile.py`` (import every package module +
 Catalyst-analyze every registry plan, no execution) whenever staged
