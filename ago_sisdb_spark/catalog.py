@@ -21,11 +21,20 @@ the root's mtime, so the next read infers again.  The file listing is never
 cached — each read lists the directory afresh, so appended rows show at
 once.  A table without a marker (not committed by Spark, or not on the
 local filesystem) is inferred on every call.
+
+The package's own writers keep the entry current (``committed``): when the
+entry matched the table just before one of their commits, and the frame
+they wrote has the cached schema's (name, type) list, the entry is
+re-keyed to the stamp taken after the commit — the files now on disk still
+infer to the same schema, so the next read skips the inference job.  Any
+other commit (another writer, a changed schema, a table not yet cached)
+leaves the entry stale and the next read infers as before.
 """
 
 from __future__ import annotations
 
 import os
+from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import StructType
@@ -105,6 +114,26 @@ def read_parquet(spark: SparkSession, path: str) -> DataFrame:
         # next call to infer again
         _SCHEMAS[path] = (stamp, df.schema)
     return df
+
+
+def _fields(schema: StructType) -> list[tuple[str, str]]:
+    return [(f.name, f.dataType.simpleString()) for f in schema.fields]
+
+
+def committed(path: str, written: DataFrame, commit: Callable[[], None]) -> None:
+    """Run ``commit`` (a Spark write of ``written`` to ``path``) and keep
+    the schema cache entry of ``path`` current across it (module
+    docstring: the writer rule)."""
+    before = _commit_stamp(path)
+    hit = _SCHEMAS.get(path)
+    commit()
+    if before is None or hit is None or hit[0] != before:
+        return
+    if _fields(written.schema) != _fields(hit[1]):
+        return
+    after = _commit_stamp(path)
+    if after is not None:
+        _SCHEMAS[path] = (after, hit[1])
 
 
 def load_table(spark: SparkSession, root: str, name: str) -> DataFrame:

@@ -2,10 +2,11 @@
 
 Two strategies, both shuffle once on the key:
 
-- ``last_per_key`` — one ``max_by(col, order)`` per column.  Partial
-  aggregation (map-side combine) means each upstream partition contributes at
-  most one candidate row per key before the shuffle — at 100 TB with ~100k
-  keys the shuffle is tiny regardless of input size.  Preferred.
+- ``last_per_key`` — argmax-join: a primitive ``max(order)`` per key, then
+  a broadcast join back to the input.  Partial aggregation (map-side
+  combine) means each upstream partition contributes at most one candidate
+  per key before the shuffle — at 100 TB with ~100k keys the shuffle is
+  tiny regardless of input size.  Preferred for full-table inputs.
 - ``last_per_key_window`` — ``row_number() over (partition by key order by
   … desc) = 1``.  Shuffles *all* rows to sort within key partitions; kept for
   when the full row ordering is needed anyway, or when ``order`` is not
@@ -75,7 +76,9 @@ def last_per_key(
     id, WAL sequence, ...) — a duplicated maximum would emit duplicate
     rows for that key (loud, not torn).  For non-unique orders use
     ``last_per_key_window``.  Every in-repo caller orders by a unique
-    sequence (p6: event_id; streaming upsert: __seq).
+    sequence (p6: event_id; streaming upsert: __seq).  ``Engine.gets`` is
+    not a caller: its input is only the requested keys' rows, so it picks
+    the record with one ``max_by(struct(*cols), order)`` in a single scan.
     """
     order_c = F.col(order_col) if isinstance(order_col, str) else order_col
     # maxima derives from df — rename its columns so the self-join is

@@ -19,11 +19,12 @@ from __future__ import annotations
 
 from dataclasses import dataclass
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import IntegralType
 
 from ago_sisdb_spark.catalog import Catalog
-from ago_sisdb_spark.operators import lastper, rangescan
+from ago_sisdb_spark.operators import rangescan
 from ago_sisdb_spark.sources.formats import render
 from ago_sisdb_spark.streaming.pubsub import key_pattern_filter
 
@@ -63,6 +64,38 @@ def _requires(needed: int):
         return wrapper
 
     return deco
+
+
+def _long_literal(term: str) -> int | None:
+    """``int(term)`` when ``term`` is the canonical text of a 64-bit
+    integer (``str(int(term)) == term``), else None."""
+    try:
+        v = int(term)
+    except ValueError:
+        return None
+    return v if str(v) == term and -(1 << 63) <= v < (1 << 63) else None
+
+
+def key_predicate(df: DataFrame, key_col: str, pattern: str) -> Column:
+    """The row predicate of one key pattern over ``df[key_col]`` — the one
+    route for ``get``/``gets``/``psub``/``delete``/``keys``.
+
+    On an integral key column, a pattern whose every comma term is the
+    canonical text of an integer compiles to a typed ``col == v`` /
+    ``col.isin(vs)``: Catalyst pushes it into the Parquet reader
+    (``PushedFilters: [EqualTo…]`` / ``[In…]``), so row groups whose key
+    min/max exclude it are skipped.  Every other pattern — globs,
+    non-canonical tokens such as ``05``, ``+5`` or ``-0``, and non-integral
+    key columns — keeps the reference's text match on ``cast(col AS
+    string)``, which is not pushable.  The two forms select the same rows:
+    an integer's string cast is its canonical text, so it equals ``t``
+    exactly when the value equals ``int(t)``."""
+    col = F.col(key_col)
+    vals = [_long_literal(t.strip()) for t in pattern.split(",") if t.strip()]
+    if (vals and None not in vals
+            and isinstance(df.schema[key_col].dataType, IntegralType)):
+        return col == vals[0] if len(vals) == 1 else col.isin(vals)
+    return key_pattern_filter(col.cast("string"), pattern)
 
 
 @dataclass
@@ -115,9 +148,7 @@ class Engine:
         spec = self.specs[sdb]
         df = self.catalog.load(spec.table)
         if key and key != "*":
-            df = df.where(
-                key_pattern_filter(F.col(spec.key_col).cast("string"), key)
-            )
+            df = df.where(key_predicate(df, spec.key_col, key))
         return df, spec, key
 
     def _order(self, spec: TableSpec) -> list:
@@ -183,9 +214,16 @@ class Engine:
     def gets(self, key_sdbs: list[str], fields: str | None = None) -> DataFrame:
         """Reference `gets` (P6): latest record for many key.sdb at once.
 
-        All keys of the same sdb resolve in ONE plan (single max_by agg),
-        not per-key point reads — the fan-out the reference loops in C
-        becomes one shuffle of one row per key.
+        All keys of the same sdb resolve in ONE scan under the typed key
+        predicate (``key_predicate``), and one ``max_by(struct(*cols),
+        order)`` per key picks the whole latest record, where ``order`` is
+        (time, order_col) — event time first, tie-broken by the id column,
+        since ids need not be time-monotonic (ADVICE r1).  The struct
+        buffer makes this a SortAggregate, which is acceptable here: the
+        input is only the requested keys' rows, and the sort replaces the
+        argmax-join's second scan, broadcast exchange and join
+        (``lastper.last_per_key``).  Each key yields exactly one row; with
+        no ``order_col``, same-time ties resolve to one of the tied rows.
         """
         by_sdb: dict[str, list[str]] = {}
         for ks in key_sdbs:
@@ -193,17 +231,13 @@ class Engine:
             by_sdb.setdefault(sdb, []).append(key)
         outs = []
         for sdb, keys in by_sdb.items():
-            spec = self.specs[sdb]
-            df, _, _ = self._resolve(f"{','.join(keys)}.{sdb}")
-            # order by event time first, tie-broken by the id column — the id
-            # alone is wrong when ids aren't time-monotonic (ADVICE r1)
-            order = (
-                F.struct(F.col(spec.time_col), F.col(spec.order_col))
-                if spec.order_col and spec.time_col
-                else (spec.order_col or spec.time_col)
-            )
-            last = lastper.last_per_key(df, [spec.key_col], order).withColumn(
-                "sdb", F.lit(sdb)
+            df, spec, _ = self._resolve(f"{','.join(keys)}.{sdb}")
+            last = (
+                df.groupBy(spec.key_col)
+                .agg(F.max_by(F.struct(*df.columns), F.struct(*self._order(spec)))
+                     .alias("__last"))
+                .select("__last.*")
+                .withColumn("sdb", F.lit(sdb))
             )
             outs.append(last)
         merged = outs[0]
@@ -251,10 +285,8 @@ class Engine:
         ``where`` takes the reference search forms (AND-object/OR-array)."""
         from ago_sisdb_spark.streaming.write import delete_range
 
-        df, spec, key = self._resolve(f"*.{key_sdb.rpartition('.')[2]}")
-        pred = key_pattern_filter(
-            F.col(spec.key_col).cast("string"), key_sdb.rpartition(".")[0] or "*"
-        )
+        df, spec, _ = self._resolve(f"*.{key_sdb.rpartition('.')[2]}")
+        pred = key_predicate(df, spec.key_col, key_sdb.rpartition(".")[0] or "*")
         if where is not None:
             from ago_sisdb_spark.operators.search import compile_search
 
@@ -353,10 +385,9 @@ class Engine:
                 k for _, k in keys
             )
             df, spec, _ = self._resolve(f"{pattern}.{sdb}")
-            key_str = F.col(spec.key_col).cast("string")
             tables.append((spec.table, df, spec.key_col, spec.time_col))
             orders.append(F.coalesce(
-                *[F.when(key_pattern_filter(key_str, k), i) for i, k in keys]
+                *[F.when(key_predicate(df, spec.key_col, k), i) for i, k in keys]
             ))
         return replay_range(
             self.spark, tables, start=start, stop=stop, orders=orders

@@ -25,7 +25,7 @@ import re
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
-from ago_sisdb_spark.catalog import load_table, read_parquet
+from ago_sisdb_spark.catalog import committed, load_table, read_parquet
 
 
 def materialize_table(
@@ -199,12 +199,16 @@ def incremental_rollup(
         written, F.count(F.lit(1)).alias("rows")
     )
     # dynamic mode: overwrite ONLY the dt partitions present in `out`
-    # (the watermark day + newer); completed older days are untouched
-    (
+    # (the watermark day + newer); completed older days are untouched.
+    # A destination with no data yet takes a static overwrite instead: a
+    # dynamic one writes no root ``_SUCCESS``, and a table without the
+    # marker never reaches the catalog's schema cache.
+    mode = "dynamic" if done is not None else "static"
+    committed(dst_path, out, lambda: (
         out.repartition("dt")
         .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
+        .option("partitionOverwriteMode", mode)
         .partitionBy("dt")
         .parquet(dst_path)
-    )
+    ))
     return written.get["rows"]

@@ -16,10 +16,16 @@ from pyspark.sql import functions as F
 
 
 def key_pattern_filter(key_col: Column, pattern: str) -> Column:
-    """Compile a reference key pattern to a pushable Column predicate.
+    """Compile a reference key pattern to a text-match Column predicate.
 
     Forms (api_sisdb.h:66-78): ``*`` (all), exact ``SH600600``, comma list
     ``SH688,SZ300``, prefix glob ``SH6*``, contains glob ``*600*``.
+
+    The predicate reaches the Parquet reader only when ``key_col`` is the
+    stored column itself (a string key).  Over ``cast(col AS string)`` of a
+    numeric key the scan gets no pushed filter, which is why
+    ``plans.engine.key_predicate`` compiles canonical integer terms to a
+    typed predicate instead and uses this form for the rest.
     """
     if pattern == "*":
         return F.lit(True)

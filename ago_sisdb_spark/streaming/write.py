@@ -25,8 +25,14 @@ from __future__ import annotations
 
 from enum import Enum
 
+from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import TimestampNTZType, TimestampType
+
+from ago_sisdb_spark.catalog import committed, read_parquet
+
+_TIMESTAMPS = {TimestampType, TimestampNTZType}
 
 
 class TimeScale(Enum):
@@ -115,14 +121,36 @@ def write_partitioned(
     rely on.  ``sortWithinPartitions`` by (key, time) gives row-group
     min/max locality per key — the Spark analogue of the reference's
     per-key block index.
+
+    An append conforms to the table's timestamp types first: a column
+    whose type is the other timestamp type (TIMESTAMP vs TIMESTAMP_NTZ)
+    of the same-named table column is cast to the table's type — exact
+    under the pinned UTC zone — so one table never mixes the two parquet
+    encodings and its inferred schema does not depend on which footer is
+    read.  The table schema comes through ``catalog.read_parquet``, a
+    cache hit while the table is unchanged.  The commit keeps that cache
+    entry current (``catalog.committed``).
     """
-    df.sparkSession.conf.set("spark.sql.session.timeZone", "UTC")
+    spark = df.sparkSession
+    spark.conf.set("spark.sql.session.timeZone", "UTC")
+    if mode == "append":
+        try:
+            table = {f.name: f.dataType for f in read_parquet(spark, path).schema}
+        except AnalysisException:  # no table yet: nothing to conform to
+            table = {}
+        casts = {
+            f.name: F.col(f.name).cast(table[f.name])
+            for f in df.schema.fields
+            if {type(f.dataType), type(table.get(f.name))} == _TIMESTAMPS
+        }
+        if casts:
+            df = df.withColumns(casts)
     out = df.withColumn("dt", F.to_date(F.col(time_col)))
     sort_cols = [key_bucket_col, time_col] if key_bucket_col else [time_col]
-    (
+    committed(path, out, lambda: (
         out.repartition("dt")
         .sortWithinPartitions(*sort_cols)
         .write.mode(mode)
         .partitionBy("dt")
         .parquet(path)
-    )
+    ))
