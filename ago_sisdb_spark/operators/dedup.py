@@ -6,23 +6,26 @@ Scale design (100 TB corpus):
 
 - exact:   hash-groupBy on a content digest — one shuffle of (digest, id),
            never the documents themselves.
-- minhash: shingle → k independent min-hashes (one pass, no shuffle) →
-           band → exploded (band, band-hash) bucket join — candidate pairs
-           only ever materialize within a bucket, the classic LSH bound.
-- simhash: 64-bit fingerprint per doc via weighted token hash bits; near-dups
+- minhash: shingle → k independent min-hashes → band buckets, all in one
+           mapInPandas pass per task (no shuffle) → (band, bucket) grouping
+           — candidate pairs only ever materialize within a bucket, the
+           classic LSH bound.
+- simhash: 60-bit fingerprint per doc via weighted token hash bits; near-dups
            = fingerprints at small Hamming distance, found by 4-way band
            partitioning (each band exact-matched by groupBy).
 
-Everything below is built-in expressions (xxhash64, transform, aggregate,
-explode) — no Python in the hot path.
+One signature hash everywhere: ``portable_hash60`` (md5-derived, 60 bits),
+so every MinHash, SimHash and duplicated-span result is reproducible by
+its DuckDB oracle twin.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.sql.types import IntegerType, LongType, StructField, StructType
 
-from ago_sisdb_spark.materialize import materialize
+from ago_sisdb_spark.materialize import materialize, spread
 
 # 2^31-1: keeps a*h products inside int64 (Spark 4 runs ANSI mode — long
 # overflow raises instead of wrapping).
@@ -30,21 +33,21 @@ _MERSENNE = (1 << 31) - 1
 # permutation seed shared by every MinHash route (kernel, expressions and
 # the DuckDB oracle SQL) so their signatures agree
 _DEFAULT_SEED = 7
+# SimHash fingerprint width: the width of portable_hash60
+_SIMHASH_BITS = 60
 
 
 def content_digest(text: Column) -> Column:
-    """Stable content digest for exact dedup (md5 here; xxhash64 is faster
-    but not portable to the SQL oracle)."""
+    """Stable content digest for exact dedup (md5, as in the SQL oracle)."""
     return F.md5(text)
 
 
 def portable_hash60(col: Column) -> Column:
     """Engine-portable 60-bit string hash: first 15 hex chars of md5,
     parsed base-16.  Produces the identical value in any engine with md5
-    (DuckDB twin: fold over the hex digits) — the hash behind the
-    oracle-checkable MinHash/SimHash twins.  xxhash64 stays the production
-    hash (one JVM intrinsic vs a full md5); the twins exist so the banded
-    pair LOGIC is hash-checked end-to-end by the SQL oracle."""
+    (DuckDB twin: fold over the hex digits) — the one signature hash of
+    the MinHash, SimHash and duplicated-span operators, so their banded
+    pair logic is hash-checked end-to-end by the SQL oracle."""
     return F.conv(F.substring(F.md5(col), 1, 15), 16, 10).cast("long")
 
 
@@ -85,22 +88,6 @@ def exact_dup_drop_ids(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     )
 
 
-def word_shingles(text: Column, k: int) -> Column:
-    """Distinct k-word shingles as an array column (expression form).
-
-    Prefer ``shingle_rows`` in pipelines — the exploded form is ~3× faster
-    (array slice/join lambdas run interpreted) and its doc-key shuffle is
-    reused by downstream per-doc aggregation.
-    """
-    words = F.split(text, r"\s+")
-    n = F.size(words)
-    idx = F.sequence(F.lit(0), F.greatest(n - k, F.lit(0)))
-    shingle = lambda i: F.array_join(F.slice(words, i + 1, k), " ")  # noqa: E731
-    return F.array_distinct(
-        F.when(n >= k, F.transform(idx, shingle)).otherwise(F.array(words[0]))
-    )
-
-
 def shingle_rows(
     df: DataFrame,
     id_col: str,
@@ -136,12 +123,7 @@ def shingle_rows(
     # exploded word rows, and hash-partitioning on the doc id lets a
     # downstream groupBy(doc) reuse the distribution with no second
     # shuffle.
-    # (skip for streaming inputs: micro-batch partitioning is the
-    # trigger's concern, and .rdd is illegal on a streaming DataFrame)
-    if not df.isStreaming:
-        target = df.sparkSession.sparkContext.defaultParallelism
-        if df.rdd.getNumPartitions() < target:
-            df = df.repartition(target, F.col(id_col))
+    df = spread(df, id_col)
     # split materialized as a column BEFORE the transform: a lambda that
     # references the raw split() expression re-evaluates the split per
     # element under the interpreted HOF path (~16× slower end-to-end)
@@ -168,29 +150,6 @@ def _perm_params(num_hashes: int, seed: int) -> list[tuple[int, int]]:
     ]
 
 
-def minhash_signatures(
-    df: DataFrame,
-    id_col: str,
-    text_col: str,
-    shingle_k: int,
-    num_hashes: int,
-    seed: int = _DEFAULT_SEED,
-) -> DataFrame:
-    """(id, sig array) per document: h_i(x) = (a_i·xxhash64(x)+b_i) mod p,
-    min over shingles.
-
-    Shape matters for speed: explode shingles → hash each shingle ONCE →
-    ``num_hashes`` cheap affine transforms → groupBy(id) min-agg.  The string
-    hash is the expensive part; computing it inside per-permutation array
-    lambdas re-hashes every shingle num_hashes times (measured 40× slower).
-    The min aggregates combine map-side, so the shuffle carries one
-    num_hashes-wide row per document.
-    """
-    return _minhash_mins(df, id_col, text_col, shingle_k, num_hashes, seed).select(
-        "doc", F.array(*[f"s{i}" for i in range(num_hashes)]).alias("sig")
-    )
-
-
 def _minhash_mins(
     df: DataFrame,
     id_col: str,
@@ -198,21 +157,14 @@ def _minhash_mins(
     shingle_k: int,
     num_hashes: int,
     seed: int = _DEFAULT_SEED,
-    portable: bool = False,
     min_words: int | None = None,
 ) -> DataFrame:
-    """One min column per permutation (s0..sN-1) — the wide form both the
-    signature array and the band hashes derive from.
-
-    ``portable=True`` swaps xxhash64 for ``portable_hash60`` so the result
-    is reproducible in the DuckDB oracle (same mins, same bands)."""
-    shingle_hash = (
-        portable_hash60(F.col("shingle"))
-        if portable
-        else F.abs(F.xxhash64("shingle"))
-    )
+    """One min column per permutation (s0..sN-1) as expressions: the
+    signature layer of ``minhash_estimator_audit`` and the reference form
+    the band-row kernel is pinned against (same mins as the DuckDB
+    oracle)."""
     base = shingle_rows(df, id_col, text_col, shingle_k, min_words).select(
-        "doc", (shingle_hash % F.lit(_MERSENNE)).alias("h")
+        "doc", (portable_hash60(F.col("shingle")) % F.lit(_MERSENNE)).alias("h")
     )
     return base.groupBy("doc").agg(
         *[
@@ -321,14 +273,15 @@ def capped_bucket_pairs(
     )
 
 
-def _portable_band_rows_udf(
+def _band_rows_udf(
     shingle_k: int, num_hashes: int, bands: int, seed: int,
     min_words: int | None,
 ):
-    """mapInPandas kernel behind ``minhash_band_rows(portable=True)``:
-    (doc, __text) Arrow batches → (doc, band, bucket) rows, numerically
-    IDENTICAL to the expression formulation (r14, guide §4.2 — the same
-    exact-replay discipline as ``similarity.fold_cosine_block``):
+    """mapInPandas kernel behind ``minhash_band_rows``: (doc, __text)
+    Arrow batches → (doc, band, bucket) rows, numerically IDENTICAL to the
+    expression formulation (``_minhash_mins`` + mod-p polynomial band
+    folds; r14, guide §4.2 — the same exact-replay discipline as
+    ``similarity.fold_cosine_block``):
 
     - word split replays Spark's ``split(text, '\\s+', -1)``: Java's
       default ``\\s`` is the ASCII class [ \\t\\n\\x0B\\f\\r], which is
@@ -355,6 +308,9 @@ def _portable_band_rows_udf(
     per-task C pass (hashlib + ``np.minimum.reduceat``) does in
     milliseconds, and the (doc, shingle) explode plus the 32-wide
     groupBy(doc) combine disappear from the plan entirely.
+
+    ``doc`` values pass through untouched (sliced from the input column),
+    so the output keeps the id column's type, string ids included.
     """
     import hashlib
     import re
@@ -375,11 +331,12 @@ def _portable_band_rows_udf(
 
     def gen(batches):
         for pdf in batches:
-            doc_ids: list[int] = []
+            docs = pdf["doc"]
+            keep: list[int] = []  # row positions of the signed docs
             counts: list[int] = []
             h_all: list[int] = []
-            null_docs: list[int] = []
-            for doc, text in zip(pdf["doc"].tolist(), pdf["__text"].tolist()):
+            null_rows: list[int] = []
+            for r, text in enumerate(pdf["__text"].tolist()):
                 if text is None:
                     # expression-form replay: with no min_words filter a
                     # NULL text still yields one NULL shingle (size(NULL)
@@ -388,7 +345,7 @@ def _portable_band_rows_udf(
                     # rows with a NULL bucket; with min_words the
                     # size(...) >= n predicate is NULL and drops the doc
                     if minw == 0:
-                        null_docs.append(doc)
+                        null_rows.append(r)
                     continue
                 w = split_re.split(text)
                 n = len(w)
@@ -403,27 +360,26 @@ def _portable_band_rows_udf(
                     >> 4
                     for i in range(m)
                 )
-                doc_ids.append(doc)
+                keep.append(r)
                 counts.append(m)
-            if null_docs:
-                ndn = len(null_docs)
+            if null_rows:
+                ndn = len(null_rows)
                 yield pd.DataFrame(
                     {
-                        "doc": np.repeat(
-                            np.array(null_docs, dtype=np.int64), bands
-                        ),
+                        "doc": docs.iloc[null_rows].repeat(bands)
+                        .reset_index(drop=True),
                         "band": np.tile(bands_i32, ndn),
                         "bucket": pd.array(
                             [None] * (ndn * bands), dtype="Int64"
                         ),
                     }
                 )
-            if not doc_ids:
+            if not keep:
                 continue
             h = np.array(h_all, dtype=np.int64) % _MERSENNE
             offsets = np.zeros(len(counts), dtype=np.int64)
             np.cumsum(np.array(counts[:-1], dtype=np.int64), out=offsets[1:])
-            nd = len(doc_ids)
+            nd = len(keep)
             sig = np.empty((nd, num_hashes), dtype=np.int64)
             for i in range(num_hashes):
                 sig[:, i] = np.minimum.reduceat(
@@ -435,7 +391,7 @@ def _portable_band_rows_udf(
                 acc = (acc * 31 + sigr[:, :, j]) % _MERSENNE
             yield pd.DataFrame(
                 {
-                    "doc": np.repeat(np.array(doc_ids, dtype=np.int64), bands),
+                    "doc": docs.iloc[keep].repeat(bands).reset_index(drop=True),
                     "band": np.tile(bands_i32, nd),
                     "bucket": acc.reshape(-1),
                 }
@@ -462,74 +418,37 @@ def minhash_band_rows(
     shingle_k: int = 3,
     num_hashes: int = 32,
     bands: int = 8,
-    portable: bool = False,
     min_words: int | None = None,
 ) -> DataFrame:
     """(doc, band, bucket) LSH band rows — the shared signature layer of
-    the self-join candidates (``minhash_lsh_candidates``) and the
-    incremental history index (``build_minhash_index``).
+    the self-join candidates (``minhash_lsh_candidates``), the
+    incremental history index (``build_minhash_index``) and the streaming
+    screen (``streaming_minhash_screen``).
 
-    The portable (md5) form runs as one vectorized mapInPandas pass over
-    the compact (doc, text) rows (``_portable_band_rows_udf`` — r14,
-    value-identical by construction, pinned row-identical vs the
-    expression form in tests/test_dedup.py): the (doc, shingle) explode,
-    the per-shingle md5→conv string chain and the 32-wide groupBy(doc)
-    min-combine all collapse into per-task C work, and the first thing
-    after the scan that ever shuffles is the 3-column band-row frame.
-    The xxhash64 production form keeps the expression path (the hash is
-    a JVM intrinsic with no cheap Python twin).  Streaming inputs and
-    non-bigint ids also keep the expression path (micro-batch
-    partitioning is the trigger's concern; the kernel's Arrow schema
-    pins ``doc`` to long)."""
-    from pyspark.sql.types import LongType
-
+    One route: a vectorized mapInPandas pass over the compact (doc, text)
+    rows (``_band_rows_udf`` — r14, value-identical by construction,
+    pinned row-identical vs the expression form in tests/test_dedup.py):
+    the (doc, shingle) explode, the per-shingle md5→conv string chain and
+    the 32-wide groupBy(doc) min-combine all collapse into per-task C
+    work, and the first thing after the scan that ever shuffles is the
+    3-column band-row frame.  ``doc`` keeps the id column's type.  A
+    streaming frame runs the same kernel; only the parallelism spread is
+    skipped there (micro-batch partitioning is the trigger's concern)."""
     _check_bands(num_hashes, bands)
-    if portable and not df.isStreaming and isinstance(
-        df.schema[id_col].dataType, LongType
-    ):
-        # same compact-doc-row parallelism spread as shingle_rows: a local
-        # corpus in one small file would otherwise run the whole kernel in
-        # a single task (at scale, input splits already provide this and
-        # the repartition never fires)
-        target = df.sparkSession.sparkContext.defaultParallelism
-        if df.rdd.getNumPartitions() < target:
-            df = df.repartition(target, F.col(id_col))
-        return df.select(
-            F.col(id_col).alias("doc"), F.col(text_col).alias("__text")
-        ).mapInPandas(
-            _portable_band_rows_udf(
-                shingle_k, num_hashes, bands, _DEFAULT_SEED, min_words
-            ),
-            "doc long, band int, bucket long",
-        )
-
-    rows = num_hashes // bands
-    mins = _minhash_mins(
-        df, id_col, text_col, shingle_k, num_hashes, portable=portable,
-        min_words=min_words,
-    )
-
-    if portable:
-        # band bucket = polynomial fold of the band's mins mod p — each
-        # step keeps acc < 2^31 so acc*31 + s stays well inside int64.
-        def _bucket(b: int) -> Column:
-            acc: Column = F.lit(b).cast("long")
-            for j in range(rows):
-                acc = (acc * 31 + F.col(f"s{b * rows + j}")) % F.lit(_MERSENNE)
-            return acc
-    else:
-        # band hash = multi-arg xxhash64 over that band's min columns
-        # directly — no signature array, no concat_ws string per band
-        def _bucket(b: int) -> Column:
-            return F.xxhash64(
-                F.lit(b), *[F.col(f"s{b * rows + j}") for j in range(rows)]
-            )
-
-    return mins.select(
-        "doc",
-        F.posexplode(F.array(*[_bucket(b) for b in range(bands)])).alias(
-            "band", "bucket"
-        ),
+    schema = StructType([
+        StructField("doc", df.schema[id_col].dataType),
+        StructField("band", IntegerType()),
+        StructField("bucket", LongType()),
+    ])
+    # same compact-doc-row parallelism spread as shingle_rows: a local
+    # corpus in one small file would otherwise run the whole kernel in a
+    # single task (at scale, input splits already provide this and the
+    # repartition never fires)
+    return spread(df, id_col).select(
+        F.col(id_col).alias("doc"), F.col(text_col).alias("__text")
+    ).mapInPandas(
+        _band_rows_udf(shingle_k, num_hashes, bands, _DEFAULT_SEED, min_words),
+        schema,
     )
 
 
@@ -542,7 +461,6 @@ def minhash_lsh_candidates(
     bands: int = 8,
     max_bucket_size: int = 1000,
     log_drops: bool = False,
-    portable: bool = False,
     min_words: int | None = None,
 ) -> DataFrame:
     """Candidate near-duplicate pairs via banded MinHash-LSH.
@@ -556,12 +474,11 @@ def minhash_lsh_candidates(
     ``exact_dedup_groups`` first — a bucket of 10⁶ byte-identical docs is
     the exact-dedup operator's job, not LSH's.
 
-    ``portable=True`` uses ``portable_hash60`` for the shingle hash and a
-    mod-p polynomial fold for the band bucket, so the ENTIRE banded pair
-    logic is reproducible in the DuckDB oracle
-    (``minhash_lsh_oracle_sql``).  Callers of the portable form should
-    pre-filter docs with >= shingle_k words: ``shingle_rows`` gives shorter
-    docs their first word, which the SQL twin's range() expansion omits.
+    The shingle hash is ``portable_hash60`` and the band bucket a mod-p
+    polynomial fold, so the ENTIRE banded pair logic is reproducible in
+    the DuckDB oracle (``minhash_lsh_oracle_sql``).  Oracle-checked
+    callers pass ``min_words=shingle_k``: shorter docs otherwise get one
+    truncated shingle, which the SQL twin's range() expansion omits.
 
     Pair generation is one aggregate, not a self-join
     (``capped_bucket_pairs``): each (band, bucket) group collects its
@@ -574,8 +491,7 @@ def minhash_lsh_candidates(
     trap applies.
     """
     banded = minhash_band_rows(
-        df, id_col, text_col, shingle_k, num_hashes, bands, portable=portable,
-        min_words=min_words,
+        df, id_col, text_col, shingle_k, num_hashes, bands, min_words
     )
     pairs = capped_bucket_pairs(
         banded, ["band", "bucket"], F.col("doc"), "x AS id_a, y AS id_b",
@@ -594,7 +510,6 @@ def minhash_lsh_drop_ids(
     num_hashes: int = 32,
     bands: int = 8,
     max_bucket_size: int = 1000,
-    portable: bool = False,
     min_words: int | None = None,
 ) -> DataFrame:
     """The ids to DROP under the keep-lowest-id near-dup policy — exactly
@@ -617,8 +532,7 @@ def minhash_lsh_drop_ids(
     ``minhash_lsh_candidates``.
     """
     banded = minhash_band_rows(
-        df, id_col, text_col, shingle_k, num_hashes, bands, portable=portable,
-        min_words=min_words,
+        df, id_col, text_col, shingle_k, num_hashes, bands, min_words
     )
     return drop_ids_from_band_rows(banded, id_col, max_bucket_size)
 
@@ -648,24 +562,22 @@ def drop_ids_from_band_rows(
     )
 
 
-def simhash64(
-    df: DataFrame, id_col: str, text_col: str, portable: bool = False
-) -> DataFrame:
-    """(id, simhash) — SimHash over whitespace tokens (64-bit; 60-bit when
-    ``portable``, the width of ``portable_hash60``).
+def simhash64(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
+    """(id, simhash) — 60-bit SimHash over whitespace tokens.
+
+    60 bits is the width of ``portable_hash60``, the token hash.
 
     For each bit position, sum +1/-1 token votes (token hash bit set → +1);
     fingerprint bit = sign of the sum.  Explode → hash each token ONCE →
     one conditional-sum aggregate per bit (map-side combined), then pack
-    the sign bits into one long.  Same shape as ``minhash_signatures`` and
-    for the same reason: the token hash is the expensive part.
+    the sign bits into one long.  The token hash is the expensive part,
+    so it runs once per token, never once per bit.
     """
-    nbits = 60 if portable else 64
-    tok_hash = portable_hash60(F.col("tok")) if portable else F.xxhash64("tok")
+    nbits = _SIMHASH_BITS
     base = df.select(
         F.col(id_col).alias("doc"),
         F.explode(F.split(F.col(text_col), r"\s+")).alias("tok"),
-    ).select("doc", tok_hash.alias("h"))
+    ).select("doc", portable_hash60(F.col("tok")).alias("h"))
     votes = base.groupBy("doc").agg(
         *[
             F.sum(
@@ -914,7 +826,6 @@ def duplicated_spans(
     span_tokens: int = 16,
     stride: int = 8,
     min_docs: int = 2,
-    portable: bool = False,
 ) -> DataFrame:
     """Cross-document duplicated-SPAN detection — the approximate form of
     exact-substring training-data dedup (Lee et al. 2021,
@@ -929,8 +840,8 @@ def duplicated_spans(
     stage, no shuffle); the only shuffled rows are (span_hash, doc,
     start) — never text.  Frequency counting partial-aggregates map-side;
     flagged hashes equi-join back to occurrences on the hash, so fan-out
-    is occurrence-count (linear), never pairwise.  ``portable=True`` swaps
-    xxhash64 for the md5-derived 60-bit hash the DuckDB twin reproduces.
+    is occurrence-count (linear), never pairwise.  The span hash is the
+    md5-derived 60-bit ``portable_hash60`` the DuckDB twin reproduces.
 
     Returns (doc, start_tok, span_hash, n_docs_sharing) — one row per
     flagged window occurrence; span [start_tok, start_tok + span_tokens).
@@ -954,13 +865,10 @@ def duplicated_spans(
     span_text = F.array_join(
         F.slice(F.col("__w"), F.col("start_tok") + 1, span_tokens), " "
     )
-    span_hash = (
-        portable_hash60(span_text) if portable else F.xxhash64(span_text)
-    )
     spans = occ.select(
         "doc",
         F.col("start_tok").cast("bigint").alias("start_tok"),
-        span_hash.alias("span_hash"),
+        portable_hash60(span_text).alias("span_hash"),
     )
     # distinct-doc count per span WITHOUT the aggregate + join-back (which
     # made the corpus-scale occurrence frame a two-consumer subplan that
@@ -990,7 +898,6 @@ def remove_duplicated_spans(
     span_tokens: int = 16,
     stride: int = 8,
     min_docs: int = 2,
-    portable: bool = False,
 ) -> DataFrame:
     """The transform half of ``duplicated_spans`` (Lee et al. 2021 CUT the
     duplicated substrings from the training text, they didn't just report
@@ -1006,7 +913,7 @@ def remove_duplicated_spans(
     and the start array are columns, so the nested HOF lambdas are the
     safe inner kind (no per-element re-evaluation)."""
     spans = duplicated_spans(
-        df, id_col, text_col, span_tokens, stride, min_docs, portable
+        df, id_col, text_col, span_tokens, stride, min_docs
     )
     flagged = spans.groupBy("doc").agg(
         F.collect_set("start_tok").alias("__starts")
@@ -1045,7 +952,7 @@ def remove_duplicated_spans_oracle_sql(
     stride: int = 8,
     min_docs: int = 2,
 ) -> str:
-    """DuckDB twin of ``remove_duplicated_spans(..., portable=True)``:
+    """DuckDB twin of ``remove_duplicated_spans``:
     same flag derivation as ``duplicated_spans_oracle_sql``, then the same
     index-filter cut (range is 1-based here, starts are 0-based — the
     i-1 aligns them exactly as Spark's 0-based filter index does)."""
@@ -1103,7 +1010,7 @@ def duplicated_spans_oracle_sql(
     stride: int = 8,
     min_docs: int = 2,
 ) -> str:
-    """DuckDB twin of ``duplicated_spans(..., portable=True)``: same
+    """DuckDB twin of ``duplicated_spans``: same
     windows, same md5-derived 60-bit span hash, same frequency gate."""
     span_expr = PORTABLE_HASH_SQL.format(
         col=(
@@ -1140,10 +1047,9 @@ def simhash_neardup_pairs(
     bands: int = 4,
     max_bucket_size: int = 1000,
     log_drops: bool = False,
-    portable: bool = False,
 ) -> DataFrame:
     """SimHash near-dup pairs: fingerprints → band blocking → exact
-    Hamming re-check (64-bit/16-bit bands; 60-bit/15-bit when ``portable``).
+    Hamming re-check (60-bit fingerprints, 15-bit bands at ``bands=4``).
 
     Pigeonhole guarantee: fingerprints within Hamming distance d share at
     least one of ``bands`` bands unchanged when d < bands — so blocking on
@@ -1154,8 +1060,8 @@ def simhash_neardup_pairs(
     constant documents collapse to a handful of fingerprints and would
     otherwise emit O(m²) candidates from one bucket (``cap_bucket_fanout``).
     """
-    width = (60 if portable else 64) // bands
-    fp = simhash64(df, id_col, text_col, portable=portable)
+    width = _SIMHASH_BITS // bands
+    fp = simhash64(df, id_col, text_col)
     banded = fp.select(
         "doc",
         "simhash",
@@ -1191,8 +1097,8 @@ def simhash_neardup_pairs(
 
 
 # --------------------------------------------------------------------------
-# DuckDB oracle twins — generated from the SAME permutation/band parameters
-# as the portable builders above, so the banded pair logic is hash-checked
+# DuckDB oracle twins — generated from the SAME hash, permutation and band
+# parameters as the builders above, so the banded pair logic is hash-checked
 # end-to-end by the driver gate (r2 verdict #2).
 # --------------------------------------------------------------------------
 
@@ -1207,7 +1113,7 @@ def minhash_lsh_oracle_sql(
     seed: int = _DEFAULT_SEED,
     max_bucket_size: int = 1000,
 ) -> str:
-    """DuckDB SQL reproducing ``minhash_lsh_candidates(..., portable=True)``
+    """DuckDB SQL reproducing ``minhash_lsh_candidates(..., min_words=shingle_k)``
     exactly: same shingles, same md5-derived 60-bit hash, same affine
     permutations (shared ``_perm_params``), same polynomial band buckets,
     same bucket cap."""
@@ -1259,10 +1165,10 @@ def simhash_pairs_oracle_sql(
     bands: int = 4,
     max_bucket_size: int = 1000,
 ) -> str:
-    """DuckDB SQL reproducing ``simhash_neardup_pairs(..., portable=True)``:
+    """DuckDB SQL reproducing ``simhash_neardup_pairs``:
     same 60-bit token hash, same per-bit votes and sign packing, same
     15-bit band blocking and bit_count(xor) re-check."""
-    nbits = 60
+    nbits = _SIMHASH_BITS
     width = nbits // bands
     hash_sql = PORTABLE_HASH_SQL.format(col="tok")
     votes = ",\n         ".join(
@@ -1366,14 +1272,10 @@ def cdc_chunk_docs(
                     prev = e
             yield pd.DataFrame({id_col: ids, "chunk_idx": idxs, "chunk": chunks})
 
-    slim = df.select(F.col(id_col), F.col(text_col))
     # spread a single-split local input across the executor cores (the
     # shingle_rows guard): per-byte numpy work on one task otherwise
     # serializes the whole corpus pass
-    if not slim.isStreaming:
-        target = slim.sparkSession.sparkContext.defaultParallelism
-        if slim.rdd.getNumPartitions() < target:
-            slim = slim.repartition(target, F.col(id_col))
+    slim = spread(df.select(F.col(id_col), F.col(text_col)), id_col)
     return slim.mapInPandas(gen, out_schema).withColumn(
         "chunk_len", F.length("chunk").cast("long")
     )
@@ -1427,7 +1329,6 @@ def build_minhash_index(
     num_hashes: int = 32,
     bands: int = 8,
     max_bucket_size: int = 1000,
-    portable: bool = False,
 ) -> None:
     """Materialize the historical corpus's (doc, band, bucket) LSH rows —
     the near-dup counterpart of d8's Bloom bitmap for incremental ingest:
@@ -1438,9 +1339,7 @@ def build_minhash_index(
     buckets are degenerate boilerplate; dropping them once bounds every
     future screen's fan-out).  Appending a day's accepted docs = appending
     their band rows; no rebuild."""
-    rows = minhash_band_rows(
-        df, id_col, text_col, shingle_k, num_hashes, bands, portable=portable
-    )
+    rows = minhash_band_rows(df, id_col, text_col, shingle_k, num_hashes, bands)
     rows = cap_bucket_fanout(rows, ["band", "bucket"], max_bucket_size)
     rows.repartition(F.col("band")).write.mode("overwrite").parquet(path)
 
@@ -1453,7 +1352,6 @@ def append_minhash_index(
     shingle_k: int = 3,
     num_hashes: int = 32,
     bands: int = 8,
-    portable: bool = False,
     band_rows: DataFrame | None = None,
 ) -> None:
     """Append a batch's (doc, band, bucket) rows to an existing index —
@@ -1469,7 +1367,7 @@ def append_minhash_index(
     they are filtered to ``df``'s ids), so the ingest loop hashes each
     batch once for screen + prune + append."""
     rows = band_rows if band_rows is not None else minhash_band_rows(
-        df, id_col, text_col, shingle_k, num_hashes, bands, portable=portable
+        df, id_col, text_col, shingle_k, num_hashes, bands
     )
     if band_rows is not None:
         rows = rows.join(
@@ -1497,7 +1395,6 @@ def minhash_screen_batch(
     shingle_k: int = 3,
     num_hashes: int = 32,
     bands: int = 8,
-    portable: bool = False,
     band_rows: DataFrame | None = None,
     min_words: int | None = None,
 ) -> DataFrame:
@@ -1522,8 +1419,7 @@ def minhash_screen_batch(
     so the hint makes the probe a single index scan with no exchange on
     the history side at any scale."""
     brows = band_rows if band_rows is not None else minhash_band_rows(
-        batch, id_col, text_col, shingle_k, num_hashes, bands,
-        portable=portable, min_words=min_words,
+        batch, id_col, text_col, shingle_k, num_hashes, bands, min_words
     )
     j = F.broadcast(brows.alias("n")).join(
         index.alias("h"),
@@ -1548,8 +1444,8 @@ def minhash_screen_oracle_sql(
     seed: int = _DEFAULT_SEED,
     max_bucket_size: int = 1000,
 ) -> str:
-    """DuckDB twin of ``build_minhash_index(portable=True)`` +
-    ``minhash_screen_batch(portable=True)``: same shingles, hashes, band
+    """DuckDB twin of ``build_minhash_index`` + ``minhash_screen_batch``:
+    same shingles, hashes, band
     folds, history-side cap, and self-pair exclusion."""
     rows = num_hashes // bands
     words = rf"string_split_regex({text_col}, '\s+')"
@@ -1593,70 +1489,6 @@ def minhash_screen_oracle_sql(
     JOIN hist h ON n.band = h.band AND n.bucket = h.bucket AND n.doc != h.doc
     GROUP BY n.doc, h.doc
     """
-
-
-def minhash_band_rows_stateless(
-    df: DataFrame,
-    id_col: str,
-    text_col: str,
-    shingle_k: int = 3,
-    num_hashes: int = 32,
-    bands: int = 8,
-    portable: bool = False,
-) -> DataFrame:
-    """(doc, band, bucket) band rows as a PURE PER-ROW expression — no
-    groupBy — for pipelines where a streaming aggregation is illegal
-    (``streaming_minhash_screen``'s stateful apply).  Identical values to
-    ``minhash_band_rows``: a doc's shingles all live in its row, so the
-    per-permutation minima are array_min over a hashed-shingle array
-    that is materialized ONCE per row (each affine transform touches only
-    the lambda variable — no re-hash per permutation, no HOF re-eval)."""
-    _check_bands(num_hashes, bands)
-    rows = num_hashes // bands
-    wdf = df.select(
-        F.col(id_col).alias("doc"),
-        F.split(F.col(text_col), r"\s+").alias("__w"),
-    )
-    w, n = F.col("__w"), F.size("__w")
-    sh = F.transform(
-        F.sequence(F.lit(1), F.greatest(n - shingle_k + 1, F.lit(1))),
-        lambda i: F.array_join(F.slice(w, i, shingle_k), " "),
-    )
-    with_sh = wdf.select("doc", sh.alias("__sh"))
-    shingle_hash = (
-        (lambda s: portable_hash60(s)) if portable
-        else (lambda s: F.abs(F.xxhash64(s)))
-    )
-    harr = F.transform(F.col("__sh"), lambda s: shingle_hash(s) % F.lit(_MERSENNE))
-    with_h = with_sh.select("doc", harr.alias("__h"))
-    mins = [
-        F.array_min(
-            F.transform(
-                F.col("__h"), lambda h: (F.lit(a) * h + F.lit(b)) % F.lit(_MERSENNE)
-            )
-        ).alias(f"s{i}")
-        for i, (a, b) in enumerate(_perm_params(num_hashes, _DEFAULT_SEED))
-    ]
-    wide = with_h.select("doc", *mins)
-
-    if portable:
-        def _bucket(b: int) -> Column:
-            acc: Column = F.lit(b).cast("long")
-            for j in range(rows):
-                acc = (acc * 31 + F.col(f"s{b * rows + j}")) % F.lit(_MERSENNE)
-            return acc
-    else:
-        def _bucket(b: int) -> Column:
-            return F.xxhash64(
-                F.lit(b), *[F.col(f"s{b * rows + j}") for j in range(rows)]
-            )
-
-    return wide.select(
-        "doc",
-        F.posexplode(F.array(*[_bucket(b) for b in range(bands)])).alias(
-            "band", "bucket"
-        ),
-    )
 
 
 def soft_dedup_weights(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
@@ -1749,14 +1581,10 @@ def minhash_estimator_audit(
     subset are pair-graph-sized and checkpointed (small collapse points);
     the true-Jaccard shingle self-join runs over candidate docs only,
     never the corpus."""
-    from pyspark.sql import functions as F
-
-    from ago_sisdb_spark.materialize import materialize
-
     cands = materialize(
         minhash_lsh_candidates(
             df, id_col, text_col, shingle_k, num_hashes, bands,
-            max_bucket_size, portable=True, min_words=shingle_k,
+            max_bucket_size, min_words=shingle_k,
         )
     )
     ids = (
@@ -1765,8 +1593,7 @@ def minhash_estimator_audit(
         .distinct()
     )
     mins = _minhash_mins(
-        df, id_col, text_col, shingle_k, num_hashes, seed=7,
-        portable=True, min_words=shingle_k,
+        df, id_col, text_col, shingle_k, num_hashes, min_words=shingle_k,
     )
     sigs = materialize(mins.join(F.broadcast(ids), "doc"))
     a = sigs.select(
@@ -1958,11 +1785,7 @@ def winnow_fingerprints(
                 fps.extend(fp[first].tolist())
             yield pd.DataFrame({id_col: ids, "pos": poss, "fp": fps})
 
-    slim = df.select(F.col(id_col), F.col(text_col))
-    if not slim.isStreaming:
-        target = slim.sparkSession.sparkContext.defaultParallelism
-        if slim.rdd.getNumPartitions() < target:
-            slim = slim.repartition(target, F.col(id_col))
+    slim = spread(df.select(F.col(id_col), F.col(text_col)), id_col)
     return slim.mapInPandas(gen, out_schema)
 
 

@@ -12,7 +12,7 @@ within its own write path (`sisdb_fmap_ctrl.c` same-key upserts);
 cross-corpus screening is part of the beyond-reference LLM-pipeline
 surface (SURVEY §2.11).
 
-Spark shapes — everything is DataFrame-native and engine-portable:
+Spark shapes — everything is DataFrame-native and portable across engines:
 
 - the filter itself is a DATAFRAME of (word, mask) rows — 32-bit words
   packed in longs, built by groupBy(word) + bit_or aggregate.  The bitmap

@@ -26,6 +26,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ago_sisdb_spark.materialize import spread
+
 
 def fit_pca(df: DataFrame, vec_col: str, dim: int, k: int):
     """Fit top-k principal components.
@@ -52,16 +54,11 @@ def fit_pca(df: DataFrame, vec_col: str, dim: int, k: int):
                 ]
             )
 
-    slim = df.select(vec_col)
     # spread a single-split local input across executor cores (the
     # shingle_rows guard) — the Gram-matrix pass otherwise runs as ONE
     # task on a one-file corpus; at scale parallelism comes from splits
-    if not slim.isStreaming:
-        target = slim.sparkSession.sparkContext.defaultParallelism
-        if slim.rdd.getNumPartitions() < target:
-            slim = slim.repartition(target)
     rows = (
-        slim
+        spread(df.select(vec_col))
         .mapInPandas(partials, "cnt long, s array<double>, g array<double>")
         .collect()
     )

@@ -301,8 +301,8 @@ def dsir_importance(
     partial-aggregated groupBys) broadcast back into ONE scoring pass over
     the raw corpus — no corpus×corpus join, no vocabulary table; the
     feature space is fixed-size by construction, which is the point of the
-    hashing trick at 100 TB.  Hashing uses the portable md5 family so the
-    gate twin restates every count and logprob (production: xxhash64).
+    hashing trick at 100 TB.  Hashing uses the md5 ``portable_hash60``
+    family so the gate twin restates every count and logprob.
 
     Returns (id, n_feats, logratio) — higher = more target-like.
     """
@@ -374,7 +374,7 @@ def full_prep_pipeline(docs: DataFrame, id_col: str = "doc_id",
                        text_col: str = "text") -> DataFrame:
     """The WHOLE training-data prep pipeline as ONE composed plan: exact
     dedup (digest window, keep lowest id) → MinHash-LSH near-dup prune
-    (portable d3 buckets, drop everything above each bucket min) →
+    (d3 buckets, drop everything above each bucket min) →
     decontaminate vs the held-out id%97 eval slice (3-gram shingle
     equi-join over the RAW non-eval corpus, stop-shingle cap 50, drop
     docs sharing ≥3 shingles) → quality gate (length + punctuation
@@ -403,7 +403,7 @@ def full_prep_pipeline(docs: DataFrame, id_col: str = "doc_id",
     # whole corpus once more on this branch (r8, same fix as d3)
     nd_drop = dedup.minhash_lsh_drop_ids(
         docs, id_col, text_col, shingle_k=3, num_hashes=32, bands=8,
-        portable=True, min_words=3,
+        min_words=3,
     )
     keep = keep.join(nd_drop, id_col, "left_anti")
     keep = keep.where(F.pmod(did, F.lit(97)) != 0)
@@ -582,7 +582,7 @@ def screen_prep_batch(
 
     ``band_rows``: precomputed (and ideally persisted)
     ``dedup.minhash_band_rows`` of the ≥3-word batch docs with the d3
-    parameters (shingle_k=3, 32 hashes, 8 bands, portable).  The index
+    parameters (shingle_k=3, 32 hashes, 8 bands).  The index
     screen and the in-batch prune are two consumers of the same band
     rows — without a shared materialized frame Spark executes the
     shingle-hash subplan once PER consumer (no exchange reuse across the
@@ -621,7 +621,7 @@ def screen_prep_batch(
     # >= 3-word eligibility rides the shingle pass's split (min_words) —
     # the old where(size(split)) pre-filter re-split the batch (r8)
     hits = dedup.minhash_screen_batch(
-        batch, index, id_col, text_col, portable=True,
+        batch, index, id_col, text_col,
         band_rows=band_rows, min_words=3,
     )
     nd = (
@@ -636,7 +636,7 @@ def screen_prep_batch(
         else:
             inb = dedup.minhash_lsh_drop_ids(
                 batch, id_col, text_col, shingle_k=3,
-                num_hashes=32, bands=8, portable=True, min_words=3,
+                num_hashes=32, bands=8, min_words=3,
             )
         keep = keep.join(inb, id_col, "left_anti")
     return keep.where(
@@ -908,7 +908,7 @@ def incremental_ingest(
     # rows — without the persisted frame each consumer re-runs the
     # shingle-hash subplan (no exchange reuse across separate aggregates)
     brows = dedup.minhash_band_rows(
-        batch, id_col, text_col, 3, 32, 8, portable=True, min_words=3
+        batch, id_col, text_col, 3, 32, 8, min_words=3
     ).persist()
     accepted = screen_prep_batch(
         batch, digests, index, id_col, text_col,
@@ -937,7 +937,7 @@ def incremental_ingest(
         # band rows were built with min_words=3, so semi-joining on ALL
         # accepted ids appends exactly the >=3-word rows — no re-split
         dedup.append_minhash_index(
-            accepted, id_col, text_col, index_path, portable=True,
+            accepted, id_col, text_col, index_path,
             band_rows=brows,
         )
         # the ledger/results row is written LAST: its presence means the
@@ -1266,7 +1266,7 @@ def prep_funnel(
     )
     nddrop = dedup.minhash_lsh_drop_ids(
         docs, id_col, text_col, shingle_k=3, num_hashes=32, bands=8,
-        portable=True, min_words=3,
+        min_words=3,
     ).withColumn("__n", F.lit(1))
     w3 = F.size(F.split(F.trim(F.col(text_col)), r"\s+")) >= 3
     contam = (

@@ -27,7 +27,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from ago_sisdb_spark.materialize import materialize
+from ago_sisdb_spark.materialize import materialize, spread
 
 EMBED_DIM = 16
 
@@ -150,14 +150,10 @@ def chunk_embed_trigram(
                 }
             )
 
-    slim = docs.select(F.col(id_col), F.col(text_col))
     # Map parallelism comes from input splits at scale; a local corpus in
     # one small file would otherwise chunk+embed on a single task (the
-    # shingle_rows guard, same rationale).  Skip for streaming inputs.
-    if not slim.isStreaming:
-        target = slim.sparkSession.sparkContext.defaultParallelism
-        if slim.rdd.getNumPartitions() < target:
-            slim = slim.repartition(target, F.col(id_col))
+    # shingle_rows guard, same rationale)
+    slim = spread(docs.select(F.col(id_col), F.col(text_col)), id_col)
     return slim.mapInPandas(gen, out_schema)
 
 

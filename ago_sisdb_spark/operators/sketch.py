@@ -28,8 +28,7 @@ Spark shape — the sketch is a DATAFRAME of (row, bucket, cnt) cells:
 - bucket positions use ``portable_hash60(term || '#r')`` — the md5-based
   portable hash family behind the MinHash/Bloom oracle twins — so the
   ENTIRE sketch (every cell, every estimate) is reproducible in DuckDB
-  SQL and hash-checked by the gate.  Production deployments can swap
-  xxhash64 in one line; the logic is hash-independent.
+  SQL and hash-checked by the gate.
 """
 
 from __future__ import annotations

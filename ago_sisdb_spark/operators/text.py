@@ -9,7 +9,7 @@ from __future__ import annotations
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
-from ago_sisdb_spark.materialize import materialize
+from ago_sisdb_spark.materialize import materialize, spread
 
 EN_STOPWORDS = (
     "the a an and or of to in is are was were be been it this that for on with as at by from",
@@ -88,8 +88,8 @@ def fingerprint(text: Column) -> Column:
     """Deterministic document fingerprint: polynomial rolling hash over
     tokens, word → (len*131 + first-char-code), folded mod 2^31-1.
 
-    Engine-portable (same arithmetic in any SQL dialect) unlike xxhash64;
-    used as the stable doc signature for incremental dedup bookkeeping.
+    Engine-portable (same arithmetic in any SQL dialect); used as the
+    stable doc signature for incremental dedup bookkeeping.
     """
     word_code = lambda t: (  # noqa: E731
         F.length(t) * 131 + F.ascii(F.substring(t, 1, 1))
@@ -1000,14 +1000,10 @@ def gopher_stats(
                 out[c] = pdf[c].values
             yield out
 
-    slim = docs.select(F.col(id_col), F.col(text_col), *passthrough)
     # spread single-split local inputs across cores (the shingle_rows /
     # cdc_chunks guard): per-gram Counter work on one task serializes the
     # corpus pass
-    if not slim.isStreaming:
-        target = slim.sparkSession.sparkContext.defaultParallelism
-        if slim.rdd.getNumPartitions() < target:
-            slim = slim.repartition(target, F.col(id_col))
+    slim = spread(docs.select(F.col(id_col), F.col(text_col), *passthrough), id_col)
     return slim.mapInPandas(gen, out_schema)
 
 

@@ -347,7 +347,7 @@ def j1_join_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # --------------------------------------------------------------------------
-# §2.11 dedup / ANN (rows-only umbrellas over xxhash64-based operators)
+# §2.11 dedup / ANN umbrellas
 # --------------------------------------------------------------------------
 
 @query(
@@ -373,8 +373,8 @@ def d4_simhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
       Hamming<=6 pairs (re-check via bit_count(xor)) on the
       engine-portable 60-bit md5 token hash, so votes, sign packing,
       band blocking, and the Hamming re-check are ALL reproduced by the
-      DuckDB oracle (r2 verdict #2).  The xxhash64/64-bit production
-      variant is ``d7_simhash_pairs`` (extended, rows-only).
+      DuckDB oracle (r2 verdict #2).  ``d7_simhash_pairs`` is the same
+      pair set as an extended entry.
     - ``winnow`` — MOSS overlap localization (r10 driver rotation, r9
       verdict #2): pairs through shared winnowing fingerprints with
       matched-span positions, composing the extended d18/d19 oracles
@@ -382,7 +382,7 @@ def d4_simhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
       inside the hash check)."""
     docs = _t(spark, sf_dir, "documents")
     sim = _dedup_ops.simhash_neardup_pairs(
-        docs, "doc_id", "text", max_hamming=6, bands=4, portable=True
+        docs, "doc_id", "text", max_hamming=6, bands=4
     ).select(
         F.lit("simhash").alias("method"),
         "id_a",

@@ -1,9 +1,10 @@
 """§2.11 — LLM-data-pipeline queries: dedup, similarity search, text
 analysis over the `documents` / `embeddings` tables.
 
-Oracle notes: MinHash/SimHash use Spark's xxhash64 (not portable to DuckDB)
-→ rows-only checks, with the exact n-gram Jaccard as the hash-checked
-ground-truth twin.  Cosine/text queries are fully oracle-checked.
+Oracle notes: MinHash, SimHash and duplicated spans hash with the md5
+``dedup.portable_hash60``, so their banded pair logic is hash-checked by
+DuckDB twins (the exact n-gram Jaccard is the ground-truth twin beside
+them).  Cosine/text queries are fully oracle-checked.
 """
 
 from __future__ import annotations
@@ -68,32 +69,19 @@ def d3_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Banded MinHash-LSH candidate pairs (32 hashes × 8 bands, 3-word
     shingles) on the engine-portable 60-bit md5 hash — the FULL banded pair
     logic (shingle→min→band→bucket-join→cap) is reproduced by the DuckDB
-    oracle (r2 verdict #2).  The xxhash64 production variant is
-    ``d3_minhash_lsh_xx`` (extended, rows-only).  Docs need >= 3 words on
-    both sides (the SQL twin's range() expansion has no short-doc rule);
+    oracle (r2 verdict #2).  Docs need >= 3 words on both sides (the SQL twin's range() expansion has no short-doc rule);
     the exclusion rides the shingle pass's own split (``min_words``) —
     a caller-side where(size(split)) paid a second corpus-wide split."""
     docs = _t(spark, sf_dir, "documents")
     return dedup.minhash_lsh_candidates(
         docs, "doc_id", "text", shingle_k=3, num_hashes=32, bands=8,
-        portable=True, min_words=3,
-    )
-
-
-@query("d3_minhash_lsh_xx", oracle=None, extended=True)
-def d3_minhash_lsh_xx(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Production MinHash-LSH (xxhash64 shingle + band hash — faster, not
-    SQL-portable).  Pair logic identical to d3_minhash_lsh, which IS
-    oracle-checked; recall semantics pinned in tests/test_dedup.py."""
-    docs = _t(spark, sf_dir, "documents")
-    return dedup.minhash_lsh_candidates(
-        docs, "doc_id", "text", shingle_k=3, num_hashes=32, bands=8
+        min_words=3,
     )
 
 
 @query("d4_simhash", oracle=None, extended=True)
 def d4_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """64-bit SimHash fingerprint per document + 16-bit band keys for
+    """60-bit SimHash fingerprint per document + four 15-bit band keys for
     Hamming-neighbor blocking; rows-only check."""
     docs = _t(spark, sf_dir, "documents")
     out = dedup.simhash64(docs, "doc_id", "text").withColumnRenamed("doc", "doc_id")
@@ -101,7 +89,7 @@ def d4_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id",
         "simhash",
         *[
-            F.shiftright("simhash", b * 16).bitwiseAND(F.lit(0xFFFF)).alias(f"band{b}")
+            F.shiftright("simhash", b * 15).bitwiseAND(F.lit(0x7FFF)).alias(f"band{b}")
             for b in range(4)
         ],
     )
@@ -266,13 +254,11 @@ def d10_dup_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Cross-document duplicated-span detection (approximate substring
     dedup, Lee et al. 2021): 16-token rolling windows at stride 8; a span
     hash in ≥2 distinct docs flags every occurrence — the boilerplate/
-    quotation-reuse catcher document-level MinHash misses.  Portable-hash
-    twin fully restated by DuckDB; the xxhash64 production variant is the
-    operator default."""
+    quotation-reuse catcher document-level MinHash misses.  The md5 span
+    hash is fully restated by the DuckDB twin."""
     docs = _t(spark, sf_dir, "documents")
     return dedup.duplicated_spans(
-        docs, "doc_id", "text", span_tokens=16, stride=8, min_docs=2,
-        portable=True,
+        docs, "doc_id", "text", span_tokens=16, stride=8, min_docs=2
     )
 
 
@@ -956,12 +942,17 @@ def pipe2_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     return comp.select("id", "component")
 
 
-@query("d7_simhash_pairs", oracle=None, extended=True)
+@query(
+    "d7_simhash_pairs",
+    oracle=dedup.simhash_pairs_oracle_sql(
+        "documents", "doc_id", "text", max_hamming=6, bands=4
+    ),
+    extended=True,
+)
 def d7_simhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """SimHash near-dup pairs (Hamming ≤ 6 over 64-bit fingerprints, 4-band
+    """SimHash near-dup pairs (Hamming ≤ 6 over 60-bit fingerprints, 4-band
     pigeonhole blocking — 100% recall for d ≤ 3 guaranteed, re-check via
-    bit_count(xor)).  xxhash64-based → rows-only; semantics pinned by
-    tests/test_dedup.py on a controlled corpus."""
+    bit_count(xor)); the whole chain is restated by the DuckDB twin."""
     docs = _t(spark, sf_dir, "documents")
     return dedup.simhash_neardup_pairs(docs, "doc_id", "text", max_hamming=6)
 
@@ -1128,7 +1119,7 @@ def pipe5_sampling(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _pipe_full_oracle() -> str:
     """Composed DuckDB twin of the end-to-end prep pipeline: each CTE is
     the oracle-proven building block of the corresponding standalone entry
-    (d1 digest window, d3 portable MinHash pairs, pipe3's capped shingle
+    (d1 digest window, d3 MinHash pairs, pipe3's capped shingle
     join, pipe1's quality gate, pipe4's packing window)."""
     minhash = dedup.minhash_lsh_oracle_sql(
         "documents", "doc_id", "text", shingle_k=3, num_hashes=32, bands=8
@@ -1192,7 +1183,7 @@ def _pipe_full_oracle() -> str:
 def pipe_full_prep(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The WHOLE training-data prep pipeline as one composite plan (r4
     verdict #7): ingest → exact dedup (digest window, keep lowest id) →
-    MinHash-LSH near-dup prune (d3's portable candidates, drop the higher
+    MinHash-LSH near-dup prune (d3's candidates, drop the higher
     id of each pair) → decontaminate vs the held-out doc_id%97 eval slice
     (3-gram shingle equi-join, stop-shingle cap 50, drop docs sharing ≥3
     shingles) → quality gate (length + punctuation ratio) → pack into
@@ -1307,9 +1298,7 @@ def pipe8_incremental_prep(spark: SparkSession, sf_dir: str) -> DataFrame:
     idx_path = dedup.minhash_index_path(warehouse, sf_dir) + "_portable"
     index = dedup.load_minhash_index(spark, idx_path)
     if index is None:
-        dedup.build_minhash_index(
-            hist.where(w3), "doc_id", "text", idx_path, portable=True
-        )
+        dedup.build_minhash_index(hist.where(w3), "doc_id", "text", idx_path)
         index = dedup.load_minhash_index(spark, idx_path)
     dig_path, st_path = prep.prep_state_paths(warehouse, sf_dir)
     state = prep.load_prep_state(spark, dig_path, st_path)
@@ -1324,7 +1313,7 @@ def pipe8_incremental_prep(spark: SparkSession, sf_dir: str) -> DataFrame:
     brows = _PIPE8_BROWS.get(sf_dir)
     if brows is None:
         brows = dedup.minhash_band_rows(
-            batch.where(w3), "doc_id", "text", 3, 32, 8, portable=True
+            batch.where(w3), "doc_id", "text", 3, 32, 8
         ).persist()
         _PIPE8_BROWS[sf_dir] = brows
     return prep.incremental_prep_batch(
@@ -1805,8 +1794,8 @@ def t15_cms_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     sketch state is <= depth*width cells regardless of corpus size and
     merges across days/corpora by cell-wise addition — the scale path for
     ad-hoc frequency probes where an exact distinct-term table would be
-    corpus-sized.  Oracle: bit-for-bit DuckDB twin over the portable md5
-    hash family (swap xxhash64 in production; logic is hash-independent)."""
+    corpus-sized.  Oracle: bit-for-bit DuckDB twin over the md5
+    ``portable_hash60`` family."""
     from ago_sisdb_spark.operators import sketch
 
     depth, width, topn = 4, 2048, 50
@@ -2425,10 +2414,9 @@ def d12_minhash_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     (operators/dedup.build_minhash_index / minhash_screen_batch): the
     approximate counterpart of d8's exact Bloom screen — band rows of 2/3
     of the corpus persisted once, the held-out 1/3 screened by a
-    (band, bucket) equi-join with no re-shingling of history.  Portable
-    hash family here so the DuckDB oracle restates the whole screen
-    (signatures, band folds, history cap, self-exclusion); production
-    swaps xxhash64 via the same flag as d3."""
+    (band, bucket) equi-join with no re-shingling of history.  The md5
+    signature hash lets the DuckDB oracle restate the whole screen
+    (signatures, band folds, history cap, self-exclusion)."""
     warehouse = spark.conf.get("spark.sql.warehouse.dir").removeprefix("file:")
     docs = _t(spark, sf_dir, "documents").where(
         F.size(F.split(F.col("text"), r"\s+")) >= 3
@@ -2436,13 +2424,9 @@ def d12_minhash_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     hist = docs.where(F.col("doc_id") % 3 != 0)
     batch = docs.where(F.col("doc_id") % 3 == 0)
     idx_path = dedup.minhash_index_path(warehouse, sf_dir) + "_portable"
-    dedup.build_minhash_index(
-        hist, "doc_id", "text", idx_path, portable=True
-    )
+    dedup.build_minhash_index(hist, "doc_id", "text", idx_path)
     index = dedup.load_minhash_index(spark, idx_path)
-    return dedup.minhash_screen_batch(
-        batch, index, "doc_id", "text", portable=True
-    )
+    return dedup.minhash_screen_batch(batch, index, "doc_id", "text")
 
 
 def _pipe2_umbrella_oracle() -> str:
@@ -3235,7 +3219,7 @@ def d13_span_removal(spark: SparkSession, sf_dir: str) -> DataFrame:
     redact).  Every doc comes back (clean ones with n_removed = 0), so the
     oracle hash-checks the reassembled text verbatim."""
     docs = _t(spark, sf_dir, "documents")
-    return dedup.remove_duplicated_spans(docs, "doc_id", "text", portable=True)
+    return dedup.remove_duplicated_spans(docs, "doc_id", "text")
 
 
 @query(

@@ -23,6 +23,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ago_sisdb_spark.materialize import spread
+
 MEDIA_SCHEMA = T.StructType(
     [
         T.StructField("media_id", T.LongType(), False),
@@ -80,18 +82,6 @@ def _decode_image_stub(buf: bytes) -> tuple[list[float] | None, str | None]:
         return None, f"decode-error: {e}"
 
 
-def _spread(slim: DataFrame) -> DataFrame:
-    """Spread a single-split local input across executor cores (the
-    shingle_rows guard): decode/transcode on one task otherwise serializes
-    the whole media pass; at scale parallelism comes from input splits."""
-    if slim.isStreaming:
-        return slim
-    target = slim.sparkSession.sparkContext.defaultParallelism
-    if slim.rdd.getNumPartitions() < target:
-        return slim.repartition(target)
-    return slim
-
-
 def extract_features(df: DataFrame, batch_limit: int = 1024) -> DataFrame:
     """Decode + featurize media rows via Arrow-batched mapInPandas.
 
@@ -132,7 +122,7 @@ def extract_features(df: DataFrame, batch_limit: int = 1024) -> DataFrame:
                     }
                 )
 
-    return _spread(df.select("media_id", "modality", "content")).mapInPandas(
+    return spread(df.select("media_id", "modality", "content")).mapInPandas(
         run, FEATURE_SCHEMA
     )
 
@@ -182,7 +172,7 @@ def resize_media(df: DataFrame, width: int, height: int) -> DataFrame:
                 }
             )
 
-    return _spread(df.select("media_id", "content")).mapInPandas(run, RESIZE_SCHEMA)
+    return spread(df.select("media_id", "content")).mapInPandas(run, RESIZE_SCHEMA)
 
 
 def frame_sample_plan(df: DataFrame, every_n_seconds: int = 5) -> DataFrame:

@@ -187,7 +187,6 @@ def streaming_minhash_screen(
     num_hashes: int = 32,
     bands: int = 8,
     max_bucket_size: int = 1000,
-    portable: bool = False,
 ) -> DataFrame:
     """Streaming twin of the d12 incremental NEAR-dup screen: the MinHash
     band index lives in ``applyInPandasWithState`` keyed by
@@ -207,8 +206,10 @@ def streaming_minhash_screen(
     minimum: pairs emitted while the bucket was still under cap cannot be
     retracted.
 
-    Emits one (id, hist_id) row per shared band; fold per-pair counts in
-    ``foreachBatch`` via ``minhash_pairs_for_batch``.
+    The band rows come from ``minhash_band_rows``: the batch screen's own
+    mapInPandas kernel runs on the stream, so both modes share one
+    signature route.  Emits one (id, hist_id) row per shared band; fold
+    per-pair counts in ``foreachBatch`` via ``minhash_pairs_for_batch``.
 
     State-schema note: the DEAD-bucket fix widened ``stateStructType``
     from ``docs array<long>`` to ``docs array<long>, dead boolean``.  A
@@ -220,10 +221,10 @@ def streaming_minhash_screen(
     """
     from pyspark.sql.streaming.state import GroupStateTimeout
 
-    from ago_sisdb_spark.operators.dedup import minhash_band_rows_stateless
+    from ago_sisdb_spark.operators.dedup import minhash_band_rows
 
-    rows = minhash_band_rows_stateless(
-        stream, id_col, text_col, shingle_k, num_hashes, bands, portable=portable
+    rows = minhash_band_rows(
+        stream, id_col, text_col, shingle_k, num_hashes, bands
     )
 
     def screen(key, pdfs, state):

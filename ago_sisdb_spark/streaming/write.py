@@ -89,19 +89,25 @@ def delete_range(
     start=None,
     stop=None,
 ) -> DataFrame:
-    """T9: delete rows of matching keys within [start, stop]."""
+    """T9: delete rows of matching keys within [start, stop].
+
+    A row whose predicate is NULL (a NULL key, or a NULL time under a
+    bound) does not match, so it survives."""
     doomed = key_pattern_pred
     if start is not None:
         doomed = doomed & (F.col(time_col) >= F.lit(start))
     if stop is not None:
         doomed = doomed & (F.col(time_col) <= F.lit(stop))
-    return current.where(~doomed)
+    return delete_where(current, doomed)
 
 
 def delete_where(current: DataFrame, predicate) -> DataFrame:
     """T9: delete by arbitrary predicate (the reference's search forms —
-    AND-object / OR-array — compile to a Column predicate upstream)."""
-    return current.where(~predicate)
+    AND-object / OR-array — compile to a Column predicate upstream).
+
+    Only rows where ``predicate`` is TRUE go; a NULL predicate keeps the
+    row (a bare ``where(~predicate)`` would drop it too)."""
+    return current.where(~F.coalesce(predicate, F.lit(False)))
 
 
 def write_partitioned(

@@ -156,14 +156,29 @@ def test_neardup_groups_end_to_end(spark, corpus):
 
 
 def test_simhash_neardup_pairs(spark, corpus):
+    """Default 4-band blocking over the 60-bit fingerprints: the pairs are
+    exactly those within the Hamming budget that share a 15-bit band
+    (the (1, 2) near-dup, hamming 11, shares none here; the 12-band
+    ``test_portable_simhash_pairs`` finds it)."""
     pairs = {
         (r.id_a, r.id_b): r.hamming
         for r in dedup.simhash_neardup_pairs(
             corpus, "doc_id", "text", max_hamming=16
         ).collect()
     }
+    fp = {r.doc: r.simhash for r in dedup.simhash64(corpus, "doc_id", "text").collect()}
+
+    def bands(h):
+        return [(h >> (15 * b)) & 0x7FFF for b in range(4)]
+
+    want = {
+        (a, b): bin(fp[a] ^ fp[b]).count("1")
+        for a in fp for b in fp
+        if a < b and bin(fp[a] ^ fp[b]).count("1") <= 16
+        and any(x == y for x, y in zip(bands(fp[a]), bands(fp[b])))
+    }
+    assert pairs == want
     assert pairs[(1, 4)] == 0  # identical docs → identical fingerprints
-    assert (1, 2) in pairs  # near-dup within hamming budget
     assert all(3 not in p for p in pairs)  # unrelated doc stays out
 
 
@@ -180,7 +195,7 @@ def test_portable_hash60_matches_md5_prefix(spark):
 
 def test_portable_minhash_same_pair_logic(spark, corpus):
     cand = dedup.minhash_lsh_candidates(
-        corpus, "doc_id", "text", shingle_k=2, num_hashes=32, bands=16, portable=True
+        corpus, "doc_id", "text", shingle_k=2, num_hashes=32, bands=16
     ).collect()
     got = {(r.id_a, r.id_b) for r in cand}
     assert (1, 4) in got  # identical docs collide in every band
@@ -196,7 +211,7 @@ def test_portable_simhash_pairs(spark, corpus):
     pairs = {
         (r.id_a, r.id_b): r.hamming
         for r in dedup.simhash_neardup_pairs(
-            corpus, "doc_id", "text", max_hamming=16, bands=12, portable=True
+            corpus, "doc_id", "text", max_hamming=16, bands=12
         ).collect()
     }
     assert pairs[(1, 4)] == 0
@@ -239,24 +254,21 @@ def test_bucket_fanout_cap_bounds_hot_bucket(spark):
 
 def test_drop_ids_match_pairwise_candidates(spark, corpus):
     """minhash_lsh_drop_ids is the pair-free twin of ``candidates →
-    distinct id_b``: the two forms must produce the SAME id set, in both
-    hash families, with and without a biting cap."""
-    for portable in (False, True):
-        want = {
-            r.id_b
-            for r in dedup.minhash_lsh_candidates(
-                corpus, "doc_id", "text", shingle_k=2, num_hashes=32,
-                bands=16, portable=portable,
-            ).collect()
-        }
-        got = {
-            r.doc_id
-            for r in dedup.minhash_lsh_drop_ids(
-                corpus, "doc_id", "text", shingle_k=2, num_hashes=32,
-                bands=16, portable=portable,
-            ).collect()
-        }
-        assert got == want and want  # non-vacuous: corpus has near-dups
+    distinct id_b``: the two forms must produce the SAME id set, with and
+    without a biting cap."""
+    want = {
+        r.id_b
+        for r in dedup.minhash_lsh_candidates(
+            corpus, "doc_id", "text", shingle_k=2, num_hashes=32, bands=16
+        ).collect()
+    }
+    got = {
+        r.doc_id
+        for r in dedup.minhash_lsh_drop_ids(
+            corpus, "doc_id", "text", shingle_k=2, num_hashes=32, bands=16
+        ).collect()
+    }
+    assert got == want and want  # non-vacuous: corpus has near-dups
 
     # hot bucket: 40 identical docs.  Tight cap drops the bucket whole on
     # both forms (empty drop set); open cap keeps it — every doc but the
@@ -576,9 +588,8 @@ def test_bigram_logprob_broadcast_shuffle_parity(spark):
 
 def test_duplicated_spans_planted_and_negative(spark):
     """Planted 16-token span shared by docs 1 and 2 at different offsets is
-    flagged at the right start positions; fully-unique docs yield nothing;
-    the portable and xxhash64 variants flag the identical (doc, start)
-    set."""
+    flagged at the right start positions; fully-unique docs yield
+    nothing."""
     from ago_sisdb_spark.operators import dedup as D
 
     shared = " ".join(f"s{i}" for i in range(16))
@@ -591,14 +602,12 @@ def test_duplicated_spans_planted_and_negative(spark):
         (4, " ".join(f"d{i}" for i in range(40))),     # unique
     ]
     df = spark.createDataFrame(rows, "doc_id long, text string")
-    out = D.duplicated_spans(df, "doc_id", "text", 16, 8, 2, portable=True)
+    out = D.duplicated_spans(df, "doc_id", "text", 16, 8, 2)
     got = {(r.doc, r.start_tok) for r in out.collect()}
     # stride 8 lands exactly on both planted offsets
     assert (1, 8) in got and (2, 16) in got
     assert all(doc in (1, 2) for doc, _ in got)
     assert all(r.n_docs_sharing == 2 for r in out.collect())
-    xx = D.duplicated_spans(df, "doc_id", "text", 16, 8, 2, portable=False)
-    assert {(r.doc, r.start_tok) for r in xx.collect()} == got
 
 
 def test_duplicated_spans_short_docs_and_args(spark):
@@ -687,20 +696,6 @@ def test_property_minhash_screen_random_parity(spark, tmp_path):
         sp = {(min(r.batch_id, r.hist_id), max(r.batch_id, r.hist_id),
                r.n_shared_bands) for r in screened}
         assert sp == ip, trial
-
-
-def test_stateless_band_rows_match_grouped_form(spark):
-    """The per-row expression form must produce byte-identical
-    (doc, band, bucket) rows to the explode+groupBy form, in both hash
-    families."""
-    rows = [(i, f"w{i % 4} common words appear here now {i % 3}") for i in range(40)]
-    df = spark.createDataFrame(rows, "doc_id long, text string")
-    for portable in (False, True):
-        a = {tuple(r) for r in dedup.minhash_band_rows(
-            df, "doc_id", "text", portable=portable).collect()}
-        b = {tuple(r) for r in dedup.minhash_band_rows_stateless(
-            df, "doc_id", "text", portable=portable).collect()}
-        assert a == b, portable
 
 
 def test_soft_dedup_weights_mass_conservation(spark):
@@ -959,8 +954,7 @@ def test_ngram_novelty_window_shape_matches_joinback(spark, tmp_path):
 
 
 def test_portable_band_rows_kernel_matches_expression(spark):
-    """r14 vectorization guard: ``minhash_band_rows(portable=True)`` (the
-    mapInPandas md5/affine/fold kernel) is ROW-IDENTICAL to the expression
+    """r14 vectorization guard: ``minhash_band_rows`` (the mapInPandas md5/affine/fold kernel) is ROW-IDENTICAL to the expression
     formulation (shingle explode → conv(md5) hash → 32 min aggregates →
     polynomial band folds) on a corpus planted with the split-semantics
     edge cases the kernel must replay exactly: leading/trailing/mixed
@@ -989,8 +983,7 @@ def test_portable_band_rows_kernel_matches_expression(spark):
 
     def expression_twin(min_words):
         mins = dedup._minhash_mins(
-            docs, "doc_id", "text", 3, 32, portable=True,
-            min_words=min_words,
+            docs, "doc_id", "text", 3, 32, min_words=min_words
         )
 
         def _bucket(b):
@@ -1010,7 +1003,7 @@ def test_portable_band_rows_kernel_matches_expression(spark):
 
     for mw in (None, 3):
         got = dedup.minhash_band_rows(
-            docs, "doc_id", "text", 3, 32, 8, portable=True, min_words=mw
+            docs, "doc_id", "text", 3, 32, 8, min_words=mw
         )
         want = expression_twin(mw)
         # names+types must match (mapInPandas output is always nullable,
@@ -1024,7 +1017,7 @@ def test_portable_band_rows_kernel_matches_expression(spark):
 
     plan = (
         dedup.minhash_band_rows(
-            docs, "doc_id", "text", 3, 32, 8, portable=True, min_words=3
+            docs, "doc_id", "text", 3, 32, 8, min_words=3
         )
         ._jdf.queryExecution()
         .executedPlan()
@@ -1035,35 +1028,49 @@ def test_portable_band_rows_kernel_matches_expression(spark):
 
 
 def test_band_rows_kernel_route_rejects_uneven_bands(corpus):
-    """The mapInPandas kernel route (portable, bigint ids) refuses a
-    ``num_hashes`` that ``bands`` does not divide, when the plan is built
+    """The mapInPandas kernel route refuses a ``num_hashes`` that ``bands`` does not divide, when the plan is built
     — not mid-job on the kernel's reshape."""
     with pytest.raises(ValueError, match="divide num_hashes"):
-        dedup.minhash_band_rows(corpus, "doc_id", "text", 3, 30, 8, portable=True)
-
-
-def test_band_rows_expression_route_rejects_uneven_bands(corpus):
-    """The expression route fails the same way instead of silently
-    dropping the hashes past ``bands * (num_hashes // bands)``."""
-    with pytest.raises(ValueError, match="divide num_hashes"):
         dedup.minhash_band_rows(corpus, "doc_id", "text", 3, 30, 8)
+
+
+def test_band_rows_streaming_route_rejects_uneven_bands(spark, tmp_path):
+    """A streaming frame takes the same kernel route and fails the same
+    way, before the query starts."""
+    from ago_sisdb_spark.streaming.dedupe import streaming_minhash_screen
+
+    src = str(tmp_path / "src")
+    spark.createDataFrame(
+        [(1, "a b c d e f g")], "doc_id long, text string"
+    ).write.parquet(src)
+    stream = spark.readStream.schema("doc_id long, text string").parquet(src)
     with pytest.raises(ValueError, match="divide num_hashes"):
-        dedup.minhash_band_rows_stateless(corpus, "doc_id", "text", 3, 30, 8)
+        dedup.minhash_band_rows(stream, "doc_id", "text", 3, 30, 8)
+    with pytest.raises(ValueError, match="divide num_hashes"):
+        streaming_minhash_screen(stream, "doc_id", "text", 3, 30, 8)
 
 
-def test_portable_band_rows_kernel_nonlong_id_falls_back(spark):
-    """The kernel's Arrow schema pins ``doc`` to long — a non-bigint id
-    column must keep the expression path (and still compute)."""
+def test_band_rows_kernel_runs_on_string_ids(spark):
+    """A string id column runs the same kernel: ``doc`` keeps the id
+    column's type and values, and the buckets equal those of the same
+    texts under bigint ids."""
+    texts = ["one two three four", "five six seven eight", None]
     docs = spark.createDataFrame(
-        [("a", "one two three four"), ("b", "five six seven eight")],
-        "doc_id string, text string",
+        list(zip(["a", "b", "c"], texts)), "doc_id string, text string"
     )
-    out = dedup.minhash_band_rows(
-        docs, "doc_id", "text", 3, 32, 8, portable=True
-    )
-    assert out.count() == 16  # 2 docs × 8 bands
+    out = dedup.minhash_band_rows(docs, "doc_id", "text", 3, 32, 8)
+    assert out.schema["doc"].dataType.simpleString() == "string"
+    rows = out.collect()
+    assert len(rows) == 24  # 3 docs × 8 bands (NULL text: NULL buckets)
     plan = out._jdf.queryExecution().executedPlan().toString()
-    assert "MapInPandas" not in plan
+    assert "MapInPandas" in plan
+    by_long = dedup.minhash_band_rows(
+        spark.createDataFrame(list(enumerate(texts)), "doc_id long, text string"),
+        "doc_id", "text", 3, 32, 8,
+    ).collect()
+    assert sorted((r.doc, r.band, r.bucket) for r in rows) == sorted(
+        ("abc"[r.doc], r.band, r.bucket) for r in by_long
+    )
 
 
 def test_winnow_property_random_batch(spark):

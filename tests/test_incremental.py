@@ -307,7 +307,7 @@ def test_streaming_ingest_prep_matches_batch(spark, tmp_path):
         "doc_id long, text string",
     )
     idx = str(tmp_path / "idx")
-    dedup.build_minhash_index(hist, "doc_id", "text", idx, portable=True)
+    dedup.build_minhash_index(hist, "doc_id", "text", idx)
     index = dedup.load_minhash_index(spark, idx)
     digests = hist.select(F.md5("text").alias("digest")).distinct()
     state = spark.createDataFrame(
@@ -447,7 +447,7 @@ def test_incremental_prep_never_scans_history(spark, tmp_path):
 
     idx = str(tmp_path / "idx")
     dig, st = prep.prep_state_paths(str(tmp_path), "corpus")
-    dedup.build_minhash_index(hist, "doc_id", "text", idx, portable=True)
+    dedup.build_minhash_index(hist, "doc_id", "text", idx)
     prep.build_prep_state(hist, dig, st, n_shards=16)
 
     shutil.rmtree(hist_src)  # history is GONE — only artifacts remain
@@ -483,7 +483,7 @@ def test_advance_prep_state_two_batches(spark, tmp_path):
     hist = spark.createDataFrame([(16, base)], "doc_id long, text string")
     idx = str(tmp_path / "idx")
     dig, st = prep.prep_state_paths(str(tmp_path), "corpus")
-    dedup.build_minhash_index(hist, "doc_id", "text", idx, portable=True)
+    dedup.build_minhash_index(hist, "doc_id", "text", idx)
     prep.build_prep_state(hist, dig, st, n_shards=16)
 
     b1_new = " ".join(f"day1w{i}" for i in range(80))
@@ -499,7 +499,7 @@ def test_advance_prep_state_two_batches(spark, tmp_path):
     assert r1_rows[0].n_docs == 1 and r1_rows[0].total_tokens == 80
     accepted1 = batch1.where(F.col("doc_id") == 32)
     prep.advance_prep_state(spark, batch1, r1, dig, st)
-    dedup.append_minhash_index(accepted1, "doc_id", "text", idx, portable=True)
+    dedup.append_minhash_index(accepted1, "doc_id", "text", idx)
 
     batch2 = spark.createDataFrame(
         [(48, b1_new),                             # exact dup of batch-1 doc
@@ -600,7 +600,7 @@ def test_incremental_ingest_foreachbatch_advances_state(spark, tmp_path):
     hist = spark.createDataFrame([(16, base)], "doc_id long, text string")
     idx = str(tmp_path / "idx")
     dig, st = prep.prep_state_paths(str(tmp_path), "corpus")
-    dedup.build_minhash_index(hist, "doc_id", "text", idx, portable=True)
+    dedup.build_minhash_index(hist, "doc_id", "text", idx)
     prep.build_prep_state(hist, dig, st, n_shards=16)
 
     b1_new = " ".join(f"day1w{i}" for i in range(80))
@@ -666,7 +666,7 @@ def test_incremental_ingest_lands_training_shards(spark, tmp_path):
     hist = spark.createDataFrame([(16, base)], "doc_id long, text string")
     idx = str(tmp_path / "idx")
     dig, st = prep.prep_state_paths(str(tmp_path), "corpus")
-    dedup.build_minhash_index(hist, "doc_id", "text", idx, portable=True)
+    dedup.build_minhash_index(hist, "doc_id", "text", idx)
     prep.build_prep_state(hist, dig, st, n_shards=16)
     shards = str(tmp_path / "shards")
 
@@ -712,7 +712,7 @@ def test_incremental_ingest_redelivery_is_idempotent(spark, tmp_path):
     )
     idx = str(tmp_path / "idx")
     dig, st = prep.prep_state_paths(str(tmp_path), "corpus")
-    dedup.build_minhash_index(hist, "doc_id", "text", idx, portable=True)
+    dedup.build_minhash_index(hist, "doc_id", "text", idx)
     prep.build_prep_state(hist, dig, st, n_shards=16)
     res, shards = str(tmp_path / "results"), str(tmp_path / "shards")
 
@@ -762,7 +762,7 @@ def test_batch_keyed_shards_compact_and_prune(spark, tmp_path):
     )
     idx = str(tmp_path / "idx")
     dig, st = prep.prep_state_paths(str(tmp_path), "corpus")
-    dedup.build_minhash_index(hist, "doc_id", "text", idx, portable=True)
+    dedup.build_minhash_index(hist, "doc_id", "text", idx)
     prep.build_prep_state(hist, dig, st, n_shards=16)
     res, shards = str(tmp_path / "results"), str(tmp_path / "shards")
     for bid, did in ((1, 32), (2, 33), (3, 48)):
@@ -810,7 +810,7 @@ def test_incremental_ingest_empty_batch_still_ledgers(spark, tmp_path):
     hist = spark.createDataFrame([(16, txt)], "doc_id long, text string")
     idx = str(tmp_path / "idx")
     dig, st = prep.prep_state_paths(str(tmp_path), "corpus")
-    dedup.build_minhash_index(hist, "doc_id", "text", idx, portable=True)
+    dedup.build_minhash_index(hist, "doc_id", "text", idx)
     prep.build_prep_state(hist, dig, st, n_shards=16)
     res = str(tmp_path / "results")
 
@@ -846,7 +846,7 @@ def test_incremental_ingest_mixed_ledger_mode_refused(spark, tmp_path):
     )
     idx = str(tmp_path / "idx")
     dig, st = prep.prep_state_paths(str(tmp_path), "corpus")
-    dedup.build_minhash_index(hist, "doc_id", "text", idx, portable=True)
+    dedup.build_minhash_index(hist, "doc_id", "text", idx)
     prep.build_prep_state(hist, dig, st, n_shards=16)
     res = str(tmp_path / "results")
 
@@ -875,7 +875,7 @@ def test_streaming_minhash_state_schema_guard(spark, tmp_path):
     import pandas as pd
     from pyspark.sql.streaming.state import GroupStateTimeout
 
-    from ago_sisdb_spark.operators.dedup import minhash_band_rows_stateless
+    from ago_sisdb_spark.operators.dedup import minhash_band_rows
     from ago_sisdb_spark.streaming import dedupe as sd
 
     src = str(tmp_path / "src")
@@ -898,7 +898,7 @@ def test_streaming_minhash_state_schema_guard(spark, tmp_path):
 
     legacy_ck = str(tmp_path / "ck-legacy")
     q = (
-        minhash_band_rows_stateless(make_stream(), "doc_id", "text", 3, 32, 8)
+        minhash_band_rows(make_stream(), "doc_id", "text", 3, 32, 8)
         .groupBy("band", "bucket")
         .applyInPandasWithState(
             screen_v1, "id long, hist_id long", "docs array<long>",
@@ -955,14 +955,13 @@ def test_minhash_screen_broadcasts_batch_side(spark, tmp_path):
         "doc_id long, text string",
     )
     idx = str(tmp_path / "idx")
-    dedup.build_minhash_index(hist, "doc_id", "text", idx, portable=True)
+    dedup.build_minhash_index(hist, "doc_id", "text", idx)
     index = dedup.load_minhash_index(spark, idx)
     batch = spark.createDataFrame(
         [(2, " ".join(f"h{i}" for i in range(60)))],
         "doc_id long, text string",
     )
-    out = dedup.minhash_screen_batch(batch, index, "doc_id", "text",
-                                     portable=True)
+    out = dedup.minhash_screen_batch(batch, index, "doc_id", "text")
     out.collect()
     plan = (
         out._jdf.queryExecution().executedPlan().toString()

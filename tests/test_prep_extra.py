@@ -515,7 +515,7 @@ def test_incremental_prep_batch_model(spark, tmp_path):
         "doc_id long, text string",
     )
     idx = str(tmp_path / "idx")
-    dedup.build_minhash_index(hist, "doc_id", "text", idx, portable=True)
+    dedup.build_minhash_index(hist, "doc_id", "text", idx)
     index = dedup.load_minhash_index(spark, idx)
     digests = hist.select(F.md5("text").alias("digest")).distinct()
     state = spark.createDataFrame([(0, 120)], "shard long, base_tokens long")
@@ -612,7 +612,7 @@ def test_incremental_prep_in_batch_near_dups(spark, tmp_path):
     )
     idx = str(tmp_path / "idx")
     dig, st = prep.prep_state_paths(str(tmp_path), "corpus")
-    dedup.build_minhash_index(hist, "doc_id", "text", idx, portable=True)
+    dedup.build_minhash_index(hist, "doc_id", "text", idx)
     prep.build_prep_state(hist, dig, st, n_shards=16)
     digests, state = prep.load_prep_state(spark, dig, st)
     index = dedup.load_minhash_index(spark, idx)
@@ -849,7 +849,7 @@ def _state(spark, tmp_path, hist, n_shards=16):
 
     idx = str(tmp_path / "idx")
     dig, st = prep.prep_state_paths(str(tmp_path), "corpus")
-    dedup.build_minhash_index(hist, "doc_id", "text", idx, portable=True)
+    dedup.build_minhash_index(hist, "doc_id", "text", idx)
     prep.build_prep_state(hist, dig, st, n_shards=n_shards)
     digests, state = prep.load_prep_state(spark, dig, st)
     from ago_sisdb_spark.operators import dedup as d
@@ -894,7 +894,7 @@ def test_divergence_neardup_direction_and_threshold(spark, tmp_path):
     digests, index, state = _state(spark, tmp_path, hist)
 
     shared = {r.batch_id: r.n_shared_bands for r in dedup.minhash_screen_batch(
-        batch, index, "doc_id", "text", portable=True).collect()}
+        batch, index, "doc_id", "text").collect()}
     assert shared == {3: 1}  # the scenario premise, pinned
 
     assert prep.screen_prep_batch(batch, digests, index).count() == 1

@@ -249,7 +249,7 @@ def test_minhash_band_rows_vs_reference_impl(spark):
     )
     got = {}
     for r in dedup.minhash_band_rows(
-        df, "doc_id", "text", k, num_hashes, bands, portable=True
+        df, "doc_id", "text", k, num_hashes, bands
     ).collect():
         got.setdefault(r.doc, {})[r.band] = r.bucket
     for i, t in enumerate(texts):
@@ -284,7 +284,7 @@ def test_simhash_vs_reference_impl(spark):
     )
     got = {
         r.doc: r.simhash
-        for r in dedup.simhash64(df, "doc_id", "text", portable=True).collect()
+        for r in dedup.simhash64(df, "doc_id", "text").collect()
     }
     assert got == {i: py_simhash(t) for i, t in enumerate(texts)}
 
@@ -439,7 +439,7 @@ def test_duplicated_spans_vs_reference_impl(spark):
     got = {
         (r.doc, r.start_tok, r.span_hash, r.n_docs_sharing)
         for r in dedup.duplicated_spans(
-            df, "doc_id", "text", span, stride, min_docs, portable=True
+            df, "doc_id", "text", span, stride, min_docs
         ).collect()
     }
     assert got == want and len(got) > 0
@@ -528,7 +528,6 @@ def test_minhash_oracle_on_messy_corpus(spark):
         (r.id_a, r.id_b, r.n_shared_bands)
         for r in dedup.minhash_lsh_candidates(
             df, "doc_id", "text", shingle_k=3, num_hashes=32, bands=8,
-            portable=True,
         ).collect()
     )
     con = duckdb.connect()
@@ -565,12 +564,11 @@ def test_minhash_screen_oracle_on_messy_corpus(spark):
     import tempfile
 
     idx = tempfile.mkdtemp() + "/idx"
-    dedup.build_minhash_index(hist, "doc_id", "text", idx, portable=True)
+    dedup.build_minhash_index(hist, "doc_id", "text", idx)
     got = sorted(
         (r.batch_id, r.hist_id, r.n_shared_bands)
         for r in dedup.minhash_screen_batch(
             batch, dedup.load_minhash_index(spark, idx), "doc_id", "text",
-            portable=True,
         ).collect()
     )
     con = duckdb.connect()
@@ -603,7 +601,7 @@ def test_simhash_oracle_on_messy_corpus(spark):
     got = sorted(
         (r.id_a, r.id_b, r.hamming)
         for r in dedup.simhash_neardup_pairs(
-            df, "doc_id", "text", max_hamming=16, bands=12, portable=True
+            df, "doc_id", "text", max_hamming=16, bands=12
         ).collect()
     )
     con = duckdb.connect()
@@ -637,7 +635,6 @@ def test_dup_spans_oracle_on_messy_corpus(spark):
         (r.doc, r.start_tok, r.span_hash, r.n_docs_sharing)
         for r in dedup.duplicated_spans(
             df, "doc_id", "text", span_tokens=8, stride=4, min_docs=2,
-            portable=True,
         ).collect()
     )
     con = duckdb.connect()
@@ -945,7 +942,7 @@ def test_remove_duplicated_spans_vs_reference_impl(spark):
     got = {
         r["doc_id"]: (r["clean_text"], r["n_removed"])
         for r in dedup.remove_duplicated_spans(
-            df, "doc_id", "text", W, STRIDE, MIN_DOCS, portable=True
+            df, "doc_id", "text", W, STRIDE, MIN_DOCS
         ).collect()
     }
     assert got == expected

@@ -271,7 +271,21 @@ def test_key_patterns_match_the_string_reference(spark, tmp_path, key_type):
         assert {r.eid for r in eng.gets([f"{pattern}.t"]).collect()} == last, pattern
         kept = eng.delete(f"{pattern}.t")
         assert sorted(r.eid for r in kept.collect()) == sorted(r.eid for r in table.where(
-            ~key_pattern_filter(F.col("k").cast("string"), pattern)).collect()), pattern
+            ~F.coalesce(key_pattern_filter(F.col("k").cast("string"), pattern),
+                        F.lit(False))).collect()), pattern
+
+
+def test_delete_keeps_rows_whose_predicate_is_null(spark, tmp_path):
+    """A NULL key never matches a key pattern and a NULL time never falls
+    inside [start, stop], so ``delete`` keeps both rows."""
+    rows = [(5, BASE, 1), (5, BASE + timedelta(minutes=1), 2), (7, BASE, 3),
+            (None, BASE, 4), (5, None, 5)]
+    df = spark.createDataFrame(rows, "k long, ts timestamp, eid long")
+    write_partitioned(df, str(tmp_path / "t.parquet"), "ts", key_bucket_col="k")
+    eng = Engine(spark, str(tmp_path), {"t": TableSpec("t", "k", "ts", order_col="eid")})
+    in_range = eng.delete("5.t", start=BASE, stop=BASE + timedelta(hours=1))
+    assert sorted(r.eid for r in in_range.collect()) == [3, 4, 5]
+    assert sorted(r.eid for r in eng.delete("5.t").collect()) == [3, 4]
 
 
 def test_gets_matches_the_argmax_join_reference(spark, tmp_path):

@@ -1,11 +1,26 @@
-"""Regenerate PLANS.md: executed physical plans of headline queries with
-plan-quality commentary.  Usage: python tools/dump_plans.py [sf_dir]"""
+"""Dump query plans.
+
+Usage:
+  python tools/dump_plans.py [sf_dir]
+      Regenerate PLANS.md: executed physical plans of headline queries
+      with plan-quality commentary.
+  python tools/dump_plans.py --explain OUT_DIR SUFFIX [query ...] [--sf SF_DIR]
+      Write ``.explain("formatted")`` of each query to
+      ``OUT_DIR/<query>_<SUFFIX>.txt`` (e.g. SUFFIX "before" from a
+      checkout of the parent commit, "after" from the change).  With no
+      query names, the list is every ``<query>_*.txt`` already in OUT_DIR,
+      so a later run regenerates the same set.
+"""
 
 from __future__ import annotations
 
+import argparse
+import glob
+import io
 import os
 import re
 import sys
+from contextlib import redirect_stdout
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
@@ -59,14 +74,48 @@ aggregation before every exchange.  Regenerate with
 """
 
 
-def main() -> None:
+DEFAULT_SF = "/root/testdata/sf0.1"
+
+
+def _registry():
     from ago_sisdb_spark.inventory import all_queries, extended_queries
     from ago_sisdb_spark.session import get_spark
 
-    sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.1"
-    spark = get_spark()
     qs = all_queries()
     qs.update(extended_queries())
+    return get_spark(), qs
+
+
+def dumped_queries(out_dir: str) -> list[str]:
+    """Query names that already have a ``<query>_<suffix>.txt`` dump."""
+    names = {
+        os.path.basename(p).rsplit("_", 1)[0]
+        for p in glob.glob(os.path.join(out_dir, "*_*.txt"))
+    }
+    return sorted(names)
+
+
+def explain(out_dir: str, suffix: str, names: list[str], sf_dir: str) -> None:
+    names = names or dumped_queries(out_dir)
+    if not names:
+        sys.exit(f"no query names given and no <query>_*.txt in {out_dir}")
+    spark, qs = _registry()
+    os.makedirs(out_dir, exist_ok=True)
+    for name in names:
+        if name not in qs:
+            print(f"skip {name}: not in registry")
+            continue
+        buf = io.StringIO()
+        with redirect_stdout(buf):
+            qs[name](spark, sf_dir).explain("formatted")
+        path = os.path.join(out_dir, f"{name}_{suffix}.txt")
+        with open(path, "w") as f:
+            f.write(buf.getvalue())
+        print(f"wrote {path}")
+
+
+def plans_md(sf_dir: str) -> None:
+    spark, qs = _registry()
     with open(os.path.join(os.path.dirname(__file__), "..", "PLANS.md"), "w") as f:
         f.write(HEADER)
         for name, note in NOTES.items():
@@ -77,6 +126,18 @@ def main() -> None:
             plan = re.sub(r"Location: InMemoryFileIndex[^,]*,?", "", plan)
             plan = re.sub(r", \[plan_id=\d+\]", "", plan)
             f.write(f"\n## {name}\n\n*{note}*\n\n```\n{plan.strip()}\n```\n")
+
+
+def main() -> None:
+    if not any(a.startswith("-") for a in sys.argv[1:]):
+        plans_md(sys.argv[1] if len(sys.argv) > 1 else DEFAULT_SF)
+        return
+    ap = argparse.ArgumentParser(usage=__doc__)
+    ap.add_argument("--explain", nargs=2, metavar=("OUT_DIR", "SUFFIX"), required=True)
+    ap.add_argument("--sf", default=DEFAULT_SF)
+    ap.add_argument("queries", nargs="*")
+    a = ap.parse_args()
+    explain(a.explain[0], a.explain[1], a.queries, a.sf)
 
 
 if __name__ == "__main__":

@@ -9,7 +9,7 @@ copy, ×N rows) and times four representative operators at ×1/×4/×8:
 - a1 OHLCV rollup   (hash-agg; shuffle ∝ output bars, not input rows)
 - p6 last-per-key   (argmax-join; shuffle ∝ #keys)
 - d1 exact dedup    (digest groupBy; shuffle ∝ #distinct digests)
-- d3 MinHash-LSH    (xxhash production variant; explode + banded self-join)
+- d3 MinHash-LSH    (mapInPandas band-row kernel + capped bucket pairs)
 
 r5 adds the approximate-index family the 100 TB claims rest on (r4
 verdict #3):
@@ -156,9 +156,10 @@ def main() -> None:
         probe("d1_exact_dedup", 
             lambda: dedup.exact_dedup_groups(dc, "doc_id", "text")
         )
-        probe("d3_minhash_xx", 
-            lambda: dedup.minhash_lsh_candidates(dc, "doc_id", "text")
-        )
+        probe("d3_minhash",
+            lambda: dedup.minhash_lsh_candidates(
+                dc, "doc_id", "text", min_words=3
+            ))
         d6_bits = 6 + round(math.log2(n))  # occupancy-preserving tuning
         probe("d6_embedding_lsh", 
             lambda: similarity.cosine_neardup_lsh(
@@ -252,7 +253,7 @@ def main() -> None:
             idxp = os.path.join(tmp, "idx")
             digp, stp = prep.prep_state_paths(tmp, "probe")
             dedup.build_minhash_index(
-                hist.where(w3), "doc_id", "text", idxp, portable=True
+                hist.where(w3), "doc_id", "text", idxp
             )
             prep.build_prep_state(hist, digp, stp)
             digests, state = prep.load_prep_state(spark, digp, stp)
@@ -588,12 +589,6 @@ def main() -> None:
         if n <= 8:
             probe("d5_cosine_pairs",
                 lambda: similarity.cosine_pairs(em, "vec_id", "embedding", 0.40))
-        # the r14 portable-MinHash mapInPandas kernel (d3 oracle variant +
-        # the pipe_full/pipe8 screens)
-        probe("d3_minhash_portable",
-            lambda: dedup.minhash_lsh_candidates(
-                dc, "doc_id", "text", portable=True, min_words=3
-            ))
         def mk_e11(em=em):
             from ago_sisdb_spark.operators import embed as embed_ops
             return embed_ops.cluster_balanced_mix(
