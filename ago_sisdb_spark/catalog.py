@@ -157,8 +157,3 @@ def load_table(spark: SparkSession, root: str, name: str) -> DataFrame:
     if name == "events" and isinstance(df.schema["ts"].dataType, LongType):
         df = df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
     return df
-
-
-def catalog_for(spark: SparkSession, root: str) -> Catalog:
-    """Cheap helper for queries(): a Catalog for (session, dir)."""
-    return Catalog(spark, root)

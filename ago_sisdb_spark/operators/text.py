@@ -791,16 +791,6 @@ def bpe_train(docs, text_col: str, n_merges: int = 6):
     )
 
 
-def bpe_merges_path(warehouse_dir: str, sf_dir: str) -> str:
-    """Stable on-disk location for a corpus's trained BPE merge table —
-    the tokenizer artifact, materialized like the IVF/PQ/MinHash indexes:
-    train once offline, serve by reading it back."""
-    import os
-
-    tag = sf_dir.rstrip("/").replace("/", "_").lstrip("_")
-    return os.path.join(warehouse_dir, "bpe_merges", tag)
-
-
 def save_bpe_merges(merges_df, path: str) -> None:
     """Persist a ``bpe_train`` result (merge_rank, pair, merged,
     pair_count) as the servable tokenizer artifact."""

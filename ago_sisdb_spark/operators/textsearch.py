@@ -176,14 +176,6 @@ def _bm25_rank(tf, dl, stats, qterms, k: int, k1: float, b: float) -> DataFrame:
     )
 
 
-def text_index_path(warehouse_dir: str, sf_dir: str) -> str:
-    """Stable on-disk location for a scale-factor's inverted index."""
-    import os
-
-    tag = sf_dir.rstrip("/").replace("/", "_").lstrip("_")
-    return os.path.join(warehouse_dir, "text_index", tag)
-
-
 def build_text_index(
     docs: DataFrame, id_col: str, text_col: str, path: str
 ) -> None:

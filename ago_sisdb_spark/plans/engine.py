@@ -175,7 +175,7 @@ class Engine:
         No range args → latest record.  ``count>0`` head / ``count<0``
         tail.  ``ifprev`` falls back to the last day with data ≤ start.
         ``offset=±n`` shifts the record located at ``start`` by n records
-        in series order.  ``fmt`` renders to json/array/csv/struct bytes;
+        in series order.  ``fmt`` renders to json/array/csv/struct/zip bytes;
         None returns the DataFrame (the composable form).
         """
         df, spec, key = self._resolve(key_sdb)

@@ -4,30 +4,23 @@ Reference: csv codecs `src/core/sis_csv.h:29-75` (S6), JSON struct codecs
 `src/core/sis_utils.h:47-50` (S8), and the 5-way output format switch
 ``json|array|csv|struct|zip`` (`src/core/sis_db.h:20-30`, S10).
 
-Spark: readers are the built-in DataFrameReader with explicit schemas
-(never inferSchema in production paths); the renderer returns driver-side
-bytes for API responses — result sets here are post-aggregation and small,
-the reference's own responses cap at 64 KB before going async
-(`workers/sisdb/sisdb.h:73`).  Large exports go through ``df.write`` sinks.
+Spark: CSV/JSON files are read by the built-in DataFrameReader with an
+explicit schema (``spark.read.schema(...).csv/json``); the inline JSON form
+is ``from_json_records``.  ``render`` returns driver-side bytes for API
+responses: one Arrow collect per reply, every format built from that table.
+Result sets here are post-aggregation and small; the reference's own
+responses cap at 64 KB before going async (`workers/sisdb/sisdb.h:73`).
+Large exports go through ``df.write`` sinks.
 """
 
 from __future__ import annotations
 
+import io
 import json
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
-
-
-def read_csv(
-    spark: SparkSession, path: str, schema: StructType, header: bool = True
-) -> DataFrame:
-    return spark.read.schema(schema).option("header", str(header).lower()).csv(path)
-
-
-def read_json(spark: SparkSession, path: str, schema: StructType) -> DataFrame:
-    return spark.read.schema(schema).json(path)
 
 
 def from_json_records(
@@ -50,17 +43,26 @@ class RenderLimitError(RuntimeError):
     ``df.write.parquet`` (distributed sinks) for large results."""
 
 
-def _arrow_ipc(pdf, compression: str | None) -> bytes:
-    import io
+def _rows(table: pa.Table) -> list[tuple]:
+    """Row tuples with Python cells.  An LTZ timestamp arrives tz-aware; it
+    is given as naive local wall-clock, the text PySpark's Row gives."""
+    cols = []
+    for col in table.columns:
+        vals = col.to_pylist()
+        if pa.types.is_timestamp(col.type) and col.type.tz:
+            vals = [None if v is None else v.astimezone().replace(tzinfo=None)
+                    for v in vals]
+        cols.append(vals)
+    return list(zip(*cols))
 
-    import pyarrow as pa
 
-    table = pa.Table.from_pandas(pdf, preserve_index=False)
-    sink = io.BytesIO()
-    opts = pa.ipc.IpcWriteOptions(compression=compression)
-    with pa.ipc.new_stream(sink, table.schema, options=opts) as w:
-        w.write_table(table)
-    return sink.getvalue()
+def _csv_field(v) -> str:
+    """A CSV cell: NULL is empty; a cell holding a comma, quote, CR or LF
+    is quoted with its quotes doubled (RFC 4180)."""
+    s = "" if v is None else str(v)
+    if any(c in s for c in ',"\r\n'):
+        return '"' + s.replace('"', '""') + '"'
+    return s
 
 
 def render(
@@ -74,65 +76,55 @@ def render(
 
     - ``json``   : array of objects (the reference's {} rows form)
     - ``array``  : column-name header + row arrays (compact form)
-    - ``csv``    : header + comma rows
+    - ``csv``    : header + comma rows, quoted where a cell needs it
     - ``struct`` : Arrow IPC stream bytes (the binary-struct analogue —
                    schema-carrying, zero-copy; replaces packed C structs)
     - ``zip``    : Arrow IPC with zstd body compression — the compressed
                    bulk-pull form (`workers/sisdb_server/sisdb_incr.h:17-30`
                    incr-zip analogue; schema-carrying, seekable by batch)
 
-    ``max_rows`` is the scale guard: rendering collects to the driver, so a
-    result larger than the cap raises ``RenderLimitError``.  The guard and
-    the render share ONE bounded collect of ``limit(max_rows+1)`` rows —
-    the plan executes once and at most max_rows+1 rows ever reach the
-    driver (r2 verdict #6: the old count-probe re-executed the full plan).
-    Large exports belong in the distributed sinks (``write_csv``,
-    ``df.write.parquet``) — mirroring the reference's own
-    64 KB-reply-then-async rule (`workers/sisdb/sisdb.h:73`).
+    One collect serves every format: ``limit(max_rows+1)`` comes to the
+    driver once, as an Arrow table, so the plan runs once and at most
+    ``max_rows+1`` rows reach the driver.  For ``json`` the JVM writes each
+    row's text (``to_json(struct(*))``) inside that collect.  More than
+    ``max_rows`` rows raises ``RenderLimitError``: large exports belong in
+    the distributed sinks (``write_csv``, ``df.write.parquet``), mirroring
+    the reference's own 64 KB-reply-then-async rule
+    (`workers/sisdb/sisdb.h:73`).
     """
+    if fmt not in ("json", "array", "csv", "struct", "zip"):
+        raise ValueError(f"unknown format: {fmt!r} (json|array|csv|struct|zip)")
     if limit is not None:
         df = df.limit(limit)
-    capped = df.limit(max_rows + 1) if max_rows is not None else df
-
-    def guard(n_rows: int) -> None:
-        if max_rows is not None and n_rows > max_rows:
-            raise RenderLimitError(
-                f"render({fmt!r}) over {max_rows} rows — use write_csv/parquet "
-                "sinks for bulk export, or pass limit="
-            )
+    capped = df.limit(max_rows + 1)
+    if fmt == "json":
+        capped = capped.selectExpr("to_json(struct(*))")
+    table = capped.toArrow()
+    if table.num_rows > max_rows:
+        raise RenderLimitError(
+            f"render({fmt!r}) over {max_rows} rows — use write_csv/parquet "
+            "sinks for bulk export, or pass limit="
+        )
 
     if fmt == "json":
-        rows = capped.toJSON().collect()
-        guard(len(rows))
-        return ("[" + ",".join(rows) + "]").encode()
+        return ("[" + ",".join(table.column(0).to_pylist()) + "]").encode()
     if fmt == "array":
-        data = [list(r) for r in capped.collect()]
-        guard(len(data))
-        head = [f.name for f in df.schema.fields]
-        return json.dumps({"fields": head, "rows": data}, default=str).encode()
+        data = {"fields": table.column_names, "rows": _rows(table)}
+        return json.dumps(data, default=str).encode()
     if fmt == "csv":
-        rows = capped.collect()
-        guard(len(rows))
-        cols = df.columns
-        out = [",".join(cols)]
-        for r in rows:
-            out.append(",".join("" if v is None else str(v) for v in r))
-        return ("\n".join(out) + "\n").encode()
-    if fmt in ("struct", "zip"):
-        pdf = capped.toPandas()
-        guard(len(pdf))
-        return _arrow_ipc(pdf, compression="zstd" if fmt == "zip" else None)
-    raise ValueError(f"unknown format: {fmt!r} (json|array|csv|struct|zip)")
+        lines = [table.column_names, *_rows(table)]
+        return "".join(",".join(map(_csv_field, r)) + "\n" for r in lines).encode()
+    sink = io.BytesIO()
+    opts = pa.ipc.IpcWriteOptions(compression="zstd" if fmt == "zip" else None)
+    with pa.ipc.new_stream(sink, table.schema, options=opts) as w:
+        w.write_table(table)
+    return sink.getvalue()
 
 
 def parse_render(data: bytes, fmt: str):
     """Inverse of ``render`` for the binary formats → pyarrow Table
     (client-side decode; compression is transparent in the IPC stream)."""
     if fmt in ("struct", "zip"):
-        import io
-
-        import pyarrow as pa
-
         with pa.ipc.open_stream(io.BytesIO(data)) as r:
             return r.read_all()
     raise ValueError(f"parse_render supports struct|zip, got {fmt!r}")

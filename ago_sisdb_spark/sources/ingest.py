@@ -107,15 +107,6 @@ def compact(
     os.rename(staging, path)
 
 
-def scan_report(df: DataFrame) -> str:
-    """The executed-plan scan lines — used by tests to assert pushdown."""
-    df.collect()
-    plan = df._jdf.queryExecution().executedPlan().toString()
-    return "\n".join(
-        line for line in plan.splitlines() if "Scan parquet" in line or "Pushed" in line
-    )
-
-
 def materialize_bucketed(
     spark: SparkSession,
     src_root: str,

@@ -33,9 +33,9 @@ class ConvertService:
     """The convert worker: declared conversions applied to a tick stream.
 
     ``start(stream)`` launches one streaming query per spec and returns the
-    handles; ``stop_all`` ends the service.  Sinks here are memory tables
-    (tests) — production swaps ``_writer`` for parquet/Delta sinks with
-    checkpoints, nothing else changes.
+    handles; ``stop_all`` ends the service.  ``start`` writes memory tables
+    (tests); ``start_to_parquet`` is the production form, the same bars
+    into checkpointed parquet append sinks.
     """
 
     key_cols: list[str]

@@ -119,14 +119,16 @@ def test_render_guard_blocks_big_results(spark):
 
 
 def test_render_executes_plan_once(spark):
-    """r2 verdict #6: the guard must not re-execute the plan — one bounded
-    collect serves both the cap check and the rendered rows.  Job count is
-    tracked per job group (single-partition input → CollectLimit runs one
-    job)."""
+    """The guard must not re-execute the plan: one bounded collect serves
+    both the cap check and the rendered rows.  Job count is tracked per job
+    group.  The input spans several partitions with fewer rows than the cap
+    in each, the shape where an incremental take runs a second job (a
+    ``spark.range`` would not show it: its limit is pushed into the scan)."""
     from ago_sisdb_spark.sources.formats import render
 
     sc = spark.sparkContext
-    df = spark.range(100).coalesce(1).withColumnRenamed("id", "k")
+    df = spark.createDataFrame([(i,) for i in range(100)], "k bigint")
+    assert df.rdd.getNumPartitions() > 1
     for fmt in ("json", "array", "csv", "struct", "zip"):
         group = f"render-once-{fmt}"
         sc.setJobGroup(group, "")
@@ -136,6 +138,162 @@ def test_render_executes_plan_once(spark):
             sc.setJobGroup(None, None)
         jobs = sc.statusTracker().getJobIdsForGroup(group)
         assert len(jobs) == 1, f"{fmt}: {len(jobs)} jobs for one render"
+
+
+# Golden bytes: a planted frame with NULLs, LTZ and NTZ timestamps (one
+# before 1970), decimals, extreme and signed-zero doubles, non-ASCII text
+# and dotted column names.  The literals are the text/array/csv replies of
+# the earlier per-format collect routes, kept so the one-collect route must
+# reproduce them byte for byte.
+GOLDEN_SCHEMA = (
+    "`k.id` bigint, `px.last` decimal(10,3), x double, ltz timestamp, "
+    "ntz timestamp_ntz, name string"
+)
+
+
+def _golden(spark):
+    from datetime import datetime
+    from decimal import Decimal
+
+    rows = [
+        (1, Decimal("1.500"), 1e-7, datetime(2024, 1, 1, 0, 0, 0, 123456),
+         datetime(2024, 1, 1, 9, 30), "東京 café"),
+        (None, None, None, None, None, None),
+        (3, Decimal("-2.250"), 1e300, datetime(1969, 12, 31, 23, 59, 59, 500000),
+         datetime(1969, 12, 31, 23, 59, 59, 500000), "plain"),
+        (4, Decimal("0.000"), -0.0, datetime(1970, 1, 1), datetime(2000, 2, 29), ""),
+    ]
+    return spark.createDataFrame(rows, GOLDEN_SCHEMA).coalesce(1)
+
+
+GOLDEN_TEXT = {
+    "json": '[{"k.id":1,"px.last":1.500,"x":1.0E-7,'
+    '"ltz":"2024-01-01T00:00:00.123Z","ntz":"2024-01-01T09:30:00.000",'
+    '"name":"東京 café"},{},'
+    '{"k.id":3,"px.last":-2.250,"x":1.0E300,"ltz":"1969-12-31T23:59:59.500Z",'
+    '"ntz":"1969-12-31T23:59:59.500","name":"plain"},'
+    '{"k.id":4,"px.last":0.000,"x":-0.0,"ltz":"1970-01-01T00:00:00.000Z",'
+    '"ntz":"2000-02-29T00:00:00.000","name":""}]',
+    "array": '{"fields": ["k.id", "px.last", "x", "ltz", "ntz", "name"], "rows": '
+    '[[1, "1.500", 1e-07, "2024-01-01 00:00:00.123456", "2024-01-01 09:30:00", '
+    '"\\u6771\\u4eac caf\\u00e9"], [null, null, null, null, null, null], '
+    '[3, "-2.250", 1e+300, "1969-12-31 23:59:59.500000", '
+    '"1969-12-31 23:59:59.500000", "plain"], '
+    '[4, "0.000", -0.0, "1970-01-01 00:00:00", "2000-02-29 00:00:00", ""]]}',
+    "csv": "k.id,px.last,x,ltz,ntz,name\n"
+    "1,1.500,1e-07,2024-01-01 00:00:00.123456,2024-01-01 09:30:00,東京 café\n"
+    ",,,,,\n"
+    "3,-2.250,1e+300,1969-12-31 23:59:59.500000,1969-12-31 23:59:59.500000,plain\n"
+    "4,0.000,-0.0,1970-01-01 00:00:00,2000-02-29 00:00:00,\n",
+}
+GOLDEN_EMPTY = {
+    "json": "[]",
+    "array": '{"fields": ["k.id", "px.last", "x", "ltz", "ntz", "name"], "rows": []}',
+    "csv": "k.id,px.last,x,ltz,ntz,name\n",
+}
+
+
+def test_render_text_formats_match_golden_bytes(spark):
+    df = _golden(spark)
+    empty = spark.createDataFrame([], GOLDEN_SCHEMA)
+    for fmt in ("json", "array", "csv"):
+        assert render(df, fmt).decode() == GOLDEN_TEXT[fmt], fmt
+        assert render(empty, fmt).decode() == GOLDEN_EMPTY[fmt], fmt
+
+
+def test_render_arrow_formats_decode_to_golden_values(spark):
+    """struct and zip carry Spark's own Arrow schema: a nullable BIGINT
+    stays int64 (a pandas round trip would make it double), LTZ is
+    ``timestamp[us, tz=UTC]`` under the UTC session, and no pandas
+    metadata rides along."""
+    from datetime import datetime, timezone
+    from decimal import Decimal
+
+    import pyarrow as pa
+
+    from ago_sisdb_spark.sources.formats import parse_render
+
+    utc = timezone.utc
+    want = [
+        {"k.id": 1, "px.last": Decimal("1.500"), "x": 1e-7,
+         "ltz": datetime(2024, 1, 1, 0, 0, 0, 123456, tzinfo=utc),
+         "ntz": datetime(2024, 1, 1, 9, 30), "name": "東京 café"},
+        dict.fromkeys(["k.id", "px.last", "x", "ltz", "ntz", "name"]),
+        {"k.id": 3, "px.last": Decimal("-2.250"), "x": 1e300,
+         "ltz": datetime(1969, 12, 31, 23, 59, 59, 500000, tzinfo=utc),
+         "ntz": datetime(1969, 12, 31, 23, 59, 59, 500000), "name": "plain"},
+        {"k.id": 4, "px.last": Decimal("0.000"), "x": -0.0,
+         "ltz": datetime(1970, 1, 1, tzinfo=utc),
+         "ntz": datetime(2000, 2, 29), "name": ""},
+    ]
+    schema = pa.schema([
+        ("k.id", pa.int64()), ("px.last", pa.decimal128(10, 3)), ("x", pa.float64()),
+        ("ltz", pa.timestamp("us", tz="UTC")), ("ntz", pa.timestamp("us")),
+        ("name", pa.string()),
+    ])
+    df = _golden(spark)
+    empty = spark.createDataFrame([], GOLDEN_SCHEMA)
+    for fmt in ("struct", "zip"):
+        table = parse_render(render(df, fmt), fmt)
+        assert table.schema == schema and table.schema.metadata is None, fmt
+        assert table.to_pylist() == want, fmt
+        assert str(table.column("x")[3].as_py()) == "-0.0"
+        none = parse_render(render(empty, fmt), fmt)
+        assert none.schema == schema and none.num_rows == 0, fmt
+
+
+def test_render_nested_and_binary_cells(spark):
+    """Nested and binary cells: json is the JVM's text; array and csv give
+    a struct cell as a dict and a map cell as its (key, value) pairs."""
+    df = spark.createDataFrame(
+        [(1, (2, "x"), {"a": 1}, bytearray(b"\x00ab"))],
+        "i int, st struct<a:int,b:string>, m map<string,int>, bin binary",
+    )
+    assert render(df, "json").decode() == (
+        '[{"i":1,"st":{"a":2,"b":"x"},"m":{"a":1},"bin":"AGFi"}]'
+    )
+    assert render(df, "array").decode() == (
+        '{"fields": ["i", "st", "m", "bin"], '
+        '"rows": [[1, {"a": 2, "b": "x"}, [["a", 1]], "b\'\\\\x00ab\'"]]}'
+    )
+    assert render(df, "csv").decode() == (
+        "i,st,m,bin\n"
+        "1,\"{'a': 2, 'b': 'x'}\",\"[('a', 1)]\",b'\\x00ab'\n"
+    )
+
+
+def test_render_csv_quotes_cells_that_need_it(spark):
+    """A cell holding a comma, quote, CR or LF is quoted, so every row
+    parses back to the header's field count and the cell's own text."""
+    import csv
+    import io
+
+    cells = ["a,b", 'say "hi"', "two\nlines", "cr\rhere", "plain", None]
+    df = spark.createDataFrame(
+        [(i, c) for i, c in enumerate(cells)], "i int, `note, free` string"
+    ).coalesce(1)
+    out = render(df, "csv").decode()
+    rows = list(csv.reader(io.StringIO(out, newline="")))
+    assert rows[0] == ["i", "note, free"]
+    assert all(len(r) == 2 for r in rows)
+    assert [r[1] for r in rows[1:]] == [c or "" for c in cells]
+    assert out.endswith("4,plain\n5,\n")
+
+
+def test_write_csv_reads_back_with_a_schema(spark, tmp_path):
+    """S6: the distributed CSV sink, read back by the built-in reader with
+    an explicit schema (no inference)."""
+    from ago_sisdb_spark.sources.formats import write_csv
+
+    df = spark.createDataFrame(
+        [("A", 1, 1.5), ("B,C", 2, None)], "sym string, t int, v double"
+    )
+    path = str(tmp_path / "out_csv")
+    write_csv(df, path)
+    back = spark.read.schema("sym string, t int, v double").option(
+        "header", "true"
+    ).csv(path)
+    assert sorted(map(tuple, back.collect())) == [("A", 1, 1.5), ("B,C", 2, None)]
 
 
 def test_write_dbf_executor_side_large(spark, tmp_path):

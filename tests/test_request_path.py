@@ -341,7 +341,7 @@ def test_request_job_counts_are_pinned(spark, landed):
             eng.psub(["3.events", "5.events", "7.events"], start=lo, stop=hi), "struct"
         ),
     }
-    pins = {"get_range": 2, "get_tail": 1, "gets": 2, "psub": 1}
+    pins = {"get_range": 1, "get_tail": 1, "gets": 2, "psub": 1}
     for request in requests.values():
         request()  # warm: the first load infers and caches the schema
     got = {
