@@ -1103,8 +1103,8 @@ def write_training_shards(
     overwrite — re-writing the same batch replaces its own partitions
     (retry-idempotent), other batches untouched.  Compaction = read the
     directory back and rewrite with ``write_training_shards(mode=
-    "overwrite")`` — do NOT use `sources.ingest.compact`, which neither
-    partitions by shard nor preserves the (bin, pos) row order.
+    "overwrite")`` — not ``Engine.pack``, which compacts the dt-partitioned
+    sisdb layout and knows nothing of shards or the (bin, pos) row order.
     """
     if mode not in ("overwrite", "append"):
         raise ValueError(f"mode must be 'overwrite' or 'append', got {mode!r}")

@@ -30,8 +30,8 @@ from pyspark.sql.types import DateType, TimestampNTZType, TimestampType
 LATEST = -1  # sentinel, mirroring the reference protocol
 
 # the landed layout's day partition: dt = to_date(time_col) under the UTC
-# session time zone (streaming.write.write_partitioned,
-# sources.ingest.materialize_table)
+# session time zone (streaming.write.conform, applied by write_partitioned,
+# the layout's one writer)
 DAY_COL = "dt"
 
 

@@ -261,15 +261,24 @@ class Engine:
 
         Returns the merged DataFrame (production persists via Delta MERGE /
         ``streaming.write.write_partitioned``).  ``records`` is a JSON
-        string (object = one row, array = many) or a list of dicts.
+        string (object = one row, array = many) or a list of dicts.  The
+        records are conformed to the table (``streaming.write.conform``),
+        so the merge keeps the table's schema.
         """
         from ago_sisdb_spark.sources.formats import from_json_records
-        from ago_sisdb_spark.streaming.write import TimeScale, upsert
 
         _, _, sdb = key_sdb.rpartition(".")
-        spec = self.specs[sdb]
-        current = self.catalog.load(spec.table)
+        current = self.catalog.load(self.specs[sdb].table)
         incoming = from_json_records(self.spark, records, schema or current.schema)
+        return self._merge(sdb, current, incoming, scale)
+
+    def _merge(self, sdb: str, current: DataFrame, incoming: DataFrame, scale):
+        """``set``/``bset``: conform ``incoming`` to the table (timestamp
+        types, ``dt``) and upsert it into ``current``."""
+        from ago_sisdb_spark.streaming.write import TimeScale, conform, upsert
+
+        spec = self.specs[sdb]
+        incoming = conform(incoming, current.schema, spec.time_col)
         return upsert(
             current,
             incoming.select(*current.columns),
@@ -342,25 +351,14 @@ class Engine:
     def bset(self, key_sdb: str, arrow_ipc: bytes, scale=None) -> DataFrame:
         """`bset` (S9, `sisdb.c:286-309`): binary-struct ingest.  The packed
         C-struct wire format maps to Arrow IPC — schema-carrying, columnar,
-        zero-copy into Spark via createDataFrame(pandas)."""
-        import io
-
+        into Spark via ``createDataFrame`` of the Arrow table itself, so a
+        nullable integer column stays integral."""
         import pyarrow as pa
 
-        from ago_sisdb_spark.streaming.write import TimeScale, upsert
-
-        table = pa.ipc.open_stream(io.BytesIO(arrow_ipc)).read_all()
         _, _, sdb = key_sdb.rpartition(".")
-        spec = self.specs[sdb]
-        current = self.catalog.load(spec.table)
-        incoming = self.spark.createDataFrame(table.to_pandas())
-        return upsert(
-            current,
-            incoming.select(*current.columns),
-            [spec.key_col],
-            spec.time_col,
-            scale or TimeScale.MILLI,
-        )
+        current = self.catalog.load(self.specs[sdb].table)
+        incoming = self.spark.createDataFrame(pa.ipc.open_stream(arrow_ipc).read_all())
+        return self._merge(sdb, current, incoming, scale)
 
     @_requires(ACCESS_READ)
     def psub(self, key_sdbs: list[str], start=None, stop=None) -> DataFrame:
@@ -406,7 +404,8 @@ class Engine:
     @_requires(ACCESS_WRITE)
     def save(self, sdb: str, path: str) -> None:
         """S11 `save`: persist the table in the query-optimal layout
-        (dt-partitioned, key/time-sorted — sources/ingest)."""
+        (dt-partitioned, key/time-sorted day files —
+        ``streaming.write.write_partitioned``)."""
         from ago_sisdb_spark.streaming.write import write_partitioned
 
         spec = self.specs[sdb]
@@ -414,8 +413,22 @@ class Engine:
         write_partitioned(df, path, spec.time_col, key_bucket_col=spec.key_col)
 
     @_requires(ACCESS_WRITE)
-    def pack(self, path: str, target_file_mb: int = 256) -> None:
-        """S11 `pack`: compact a saved table's files (sources/ingest.compact)."""
-        from ago_sisdb_spark.sources.ingest import compact
+    def pack(self, sdb: str, path: str) -> None:
+        """S11 `pack` (`sisdb_disk.c:338-373`): merge each day of a table
+        saved at ``path`` that holds more than one file — appends add one
+        per batch — into one (key, time)-sorted file.  The file listing
+        runs no Spark job; only those days are read and re-committed,
+        through ``write_partitioned``'s day replace: every other day
+        directory is left as it is, the table root keeps its inode, and
+        the schema cache entry stays current."""
+        from ago_sisdb_spark.catalog import read_parquet
+        from ago_sisdb_spark.streaming.write import day_files, write_partitioned
 
-        compact(self.spark, path, target_file_mb=target_file_mb)
+        spec = self.specs[sdb]
+        table = read_parquet(self.spark, path)
+        days = [day for day, files in day_files(table).items() if len(files) > 1]
+        if days:
+            write_partitioned(
+                table.where(F.col("dt").isin(days)), path, spec.time_col,
+                mode="replace_days", key_bucket_col=spec.key_col,
+            )

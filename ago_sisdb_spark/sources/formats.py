@@ -44,14 +44,14 @@ class RenderLimitError(RuntimeError):
 
 
 def _rows(table: pa.Table) -> list[tuple]:
-    """Row tuples with Python cells.  An LTZ timestamp arrives tz-aware; it
-    is given as naive local wall-clock, the text PySpark's Row gives."""
+    """Row tuples with Python cells.  An LTZ timestamp arrives tz-aware in
+    its Arrow column's zone, the session zone; it is given as that zone's
+    naive wall clock, the one ``json`` writes."""
     cols = []
     for col in table.columns:
         vals = col.to_pylist()
         if pa.types.is_timestamp(col.type) and col.type.tz:
-            vals = [None if v is None else v.astimezone().replace(tzinfo=None)
-                    for v in vals]
+            vals = [None if v is None else v.replace(tzinfo=None) for v in vals]
         cols.append(vals)
     return list(zip(*cols))
 

@@ -12,7 +12,7 @@ The reference's ingest/pub-sub/replay stack maps onto Structured Streaming:
                           min-heap pop loop
 - T4 lifecycle protocol → StreamingQueryListener events
 - T5 late data          → watermarks + per-scale upsert rules (write.py)
-- T7 daily cutover      → date-partitioned append, nightly compaction
+- T7 daily cutover      → date-partitioned append, day-scoped pack (write.py)
 - T8/T9 upsert/delete   → merge/delete emulation over parquet (write.py;
                           Delta's MERGE INTO where the jar is available)
 """

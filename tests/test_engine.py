@@ -146,8 +146,54 @@ def test_save_and_pack_roundtrip(eng, spark, sf_small, tmp_path):
     raw = load_table(spark, sf_small, "events")
     assert saved.count() == raw.count()
     assert "dt" in saved.columns  # partition layout
-    eng.pack(out, target_file_mb=512)
+    eng.pack("events", out)
     assert spark.read.parquet(out).count() == raw.count()
+
+
+def test_set_and_bset_keep_a_landed_tables_schema(spark, sf_small, tmp_path):
+    """On a table landed by ``save`` (dt-partitioned, ``ts`` TIMESTAMP_NTZ),
+    ``set`` and ``bset`` merge to exactly the table's schema: the records
+    get the table's timestamp type and a derived ``dt``, and a NULL in a
+    BIGINT column of the Arrow batch stays BIGINT."""
+    import io
+    from datetime import datetime
+
+    import pyarrow as pa
+
+    spec = {"events": TableSpec("events", "user_id", "ts", order_col="event_id")}
+    Engine(spark, sf_small, spec).save("events", str(tmp_path / "events.parquet"))
+    landed = Engine(spark, str(tmp_path), dict(spec))
+    table = landed.catalog.load("events")
+    assert "dt" in table.columns
+    assert table.schema["ts"].dataType.simpleString() == "timestamp_ntz"
+    n = table.count()
+    ts = datetime(2024, 1, 3, 4, 5, 6)
+    rec = {"event_id": 30_000_000, "ts": ts, "user_id": 7,
+           "event_type": "view", "value": 2.5, "props": "{}"}
+    merged = landed.set("7.events", [rec])
+    assert merged.schema == table.schema
+    hit = merged.where("event_id = 30000000").collect()
+    assert [(r.ts, r.dt) for r in hit] == [(ts, ts.date())]
+
+    batch = pa.table({
+        "event_id": pa.array([None, 30_000_001], pa.int64()),
+        "ts": pa.array([ts, ts], pa.timestamp("us")),
+        "user_id": pa.array([7, 7], pa.int64()),
+        "event_type": ["view", "view"],
+        "value": [1.0, 2.0],
+        "props": ["{}", "{}"],
+    })
+    sink = io.BytesIO()
+    with pa.ipc.new_stream(sink, batch.schema) as w:
+        w.write_table(batch)
+    merged = landed.bset("7.events", sink.getvalue())
+    assert merged.schema == table.schema
+    assert merged.count() == n + 2
+    got = merged.where(
+        F.col("event_id").isNull() | (F.col("event_id") == 30_000_001)
+    ).select("event_id", "dt").collect()
+    assert sorted(got, key=lambda r: r.event_id or 0) == [
+        (None, ts.date()), (30_000_001, ts.date())]
 
 
 def test_sub_filters_stream_by_key(eng, spark, sf_small, tmp_path):

@@ -262,6 +262,25 @@ def test_render_nested_and_binary_cells(spark):
     )
 
 
+def test_ltz_text_is_the_session_zones_wall_clock(spark, monkeypatch):
+    """An LTZ cell reads as the session zone's wall clock in every text
+    format, whatever the Python process's own zone."""
+    import time
+
+    df = spark.sql("select timestamp'2024-01-01 00:00:00' as ltz")
+    monkeypatch.setenv("TZ", "Asia/Shanghai")
+    time.tzset()
+    try:
+        as_json = json.loads(render(df, "json"))[0]["ltz"]
+        as_array = json.loads(render(df, "array"))["rows"][0][0]
+        as_csv = render(df, "csv").decode().splitlines()[1]
+    finally:
+        monkeypatch.undo()
+        time.tzset()
+    assert as_json == "2024-01-01T00:00:00.000Z"
+    assert as_array == as_csv == "2024-01-01 00:00:00"
+
+
 def test_render_csv_quotes_cells_that_need_it(spark):
     """A cell holding a comma, quote, CR or LF is quoted, so every row
     parses back to the header's field count and the cell's own text."""

@@ -1,23 +1,34 @@
-"""Ingest layout contract: after materialize_table, time filters reach the
-parquet scan (PushedFilters) and dt partitions prune — the structural
-guarantee every 100 TB range query depends on."""
+"""Ingest layout contract: after a table is landed by
+``streaming.write.write_partitioned``, time filters reach the parquet scan
+(PushedFilters), dt partitions prune, and every file holds one day in
+(key, time) order — the structural guarantee every 100 TB range query
+depends on.  ``Engine.pack`` merges only the days appends split, through
+the same writer."""
 
 from __future__ import annotations
 
+import glob
 import os
+from datetime import timedelta
 
+import pyarrow.parquet as pq
 import pytest
 from pyspark.sql import functions as F
 
-from ago_sisdb_spark.sources.ingest import compact, materialize_table
+from ago_sisdb_spark.catalog import load_table
+from ago_sisdb_spark.plans.engine import Engine, TableSpec
+from ago_sisdb_spark.streaming.write import write_partitioned
+
+EVENTS = {"events": TableSpec("events", "user_id", "ts", order_col="event_id")}
 
 
 @pytest.fixture(scope="module")
 def mat_events(spark, sf_small, tmp_path_factory):
     dst = str(tmp_path_factory.mktemp("ingest") / "events")
-    return materialize_table(
-        spark, sf_small, "events", dst, time_col="ts", key_col="user_id"
-    ), dst
+    write_partitioned(
+        load_table(spark, sf_small, "events"), dst, "ts", key_bucket_col="user_id"
+    )
+    return spark.read.parquet(dst), dst
 
 
 def _scan_lines(df):
@@ -65,21 +76,98 @@ def test_materialized_preserves_rows(spark, sf_small, mat_events):
     assert a == b
 
 
-def test_compact_reduces_files_and_keeps_rows(spark, mat_events):
-    import glob
+def _files_by_day(path):
+    by_day = {}
+    for f in glob.glob(os.path.join(path, "dt=*", "*.parquet")):
+        by_day.setdefault(os.path.basename(os.path.dirname(f)), []).append(f)
+    return by_day
 
-    df, dst = mat_events
-    n_before = df.count()
-    compact(spark, dst, target_file_mb=512, sort_cols=["user_id", "ts"])
-    after = spark.read.parquet(dst)
-    assert after.count() == n_before
-    files = glob.glob(f"{dst}/**/*.parquet", recursive=True)
-    # 512 MB target on tiny data → one file per partition dir at most
-    by_dir = {}
-    for f in files:
-        by_dir.setdefault(f.rsplit("/", 1)[0], 0)
-        by_dir[f.rsplit("/", 1)[0]] += 1
-    assert max(by_dir.values()) == 1
+
+def _key_time_sorted(f) -> bool:
+    t = pq.read_table(f, columns=["user_id", "ts"])
+    rows = list(zip(t.column("user_id").to_pylist(), t.column("ts").to_pylist()))
+    return rows == sorted(rows)
+
+
+def _later_batch(raw, day, n, shift):
+    """``n`` rows of ``raw`` moved onto ``day`` (same wall-clock time of
+    day), with fresh event ids — an appended batch that lands in that
+    day's partition."""
+    rows = raw.orderBy(F.desc("event_id")).limit(n)
+    return rows.withColumns({
+        "event_id": F.col("event_id") + shift,
+        "ts": F.make_timestamp_ntz(
+            F.lit(day.year), F.lit(day.month), F.lit(day.day),
+            F.hour("ts"), F.minute("ts"), F.second("ts"),
+        ),
+    })
+
+
+def _jobs(spark, group: str, request) -> int:
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        request()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_save_and_appends_write_key_time_sorted_files(spark, sf_small, tmp_path):
+    """The writer's (key, time) order reaches every file: a sort that does
+    not lead with ``dt`` is replaced by the write's own sort on ``dt``."""
+    path = str(tmp_path / "events.parquet")
+    Engine(spark, sf_small, dict(EVENTS)).save("events", path)
+    raw = load_table(spark, sf_small, "events")
+    last = raw.agg(F.max("ts")).first()[0].date()
+    for i in (1, 2):
+        batch = _later_batch(raw, last - timedelta(days=i), 50, i * 10**9)
+        write_partitioned(batch, path, "ts", mode="append", key_bucket_col="user_id")
+    files = [f for fs in _files_by_day(path).values() for f in fs]
+    assert len(files) > len(_files_by_day(path))  # the appends added files
+    assert [f for f in files if not _key_time_sorted(f)] == []
+
+
+def test_pack_merges_only_the_days_appends_split(spark, sf_small, tmp_path):
+    """Save, append two batches into one day, pack: that day becomes one
+    (key, time)-sorted file; every other day directory keeps its mtime;
+    the table root keeps its inode; the rows are unchanged; and the
+    commit keeps the schema cache current, so the next ``get`` runs no
+    inference job."""
+    path = str(tmp_path / "events.parquet")
+    Engine(spark, sf_small, dict(EVENTS)).save("events", path)
+    raw = load_table(spark, sf_small, "events")
+    day = raw.agg(F.max("ts")).first()[0].date()
+    for i in (1, 2):
+        batch = _later_batch(raw, day, 40, i * 10**9)
+        write_partitioned(batch, path, "ts", mode="append", key_bucket_col="user_id")
+    split = f"dt={day.isoformat()}"
+    before = _files_by_day(path)
+    assert len(before[split]) == 3
+    assert all(len(fs) == 1 for d, fs in before.items() if d != split)
+    others = [d for d in before if d != split]
+    mtimes = [os.stat(os.path.join(path, d)).st_mtime_ns for d in others]
+    inode = os.stat(path).st_ino
+    landed = Engine(spark, str(tmp_path), dict(EVENTS))
+    rows = sorted(landed.get("*.events", count=10**6).collect())
+
+    landed.pack("events", path)
+
+    after = _files_by_day(path)
+    assert set(after) == set(before)
+    assert len(after[split]) == 1 and _key_time_sorted(after[split][0])
+    assert [os.stat(os.path.join(path, d)).st_mtime_ns for d in others] == mtimes
+    assert os.stat(path).st_ino == inode
+    assert os.path.exists(os.path.join(path, "_SUCCESS"))
+    assert _jobs(spark, "pack-next-get", lambda: landed.get("*.events", count=10**6)) == 0
+    assert sorted(landed.get("*.events", count=10**6).collect()) == rows
+
+
+def test_pack_of_a_table_with_one_file_per_day_writes_nothing(spark, mat_events, tmp_path):
+    _, dst = mat_events
+    mtime = os.stat(dst).st_mtime_ns
+    Engine(spark, str(tmp_path), dict(EVENTS)).pack("events", dst)
+    assert os.stat(dst).st_mtime_ns == mtime
 
 
 def test_bucketed_join_has_no_shuffle(spark, sf_small, tmp_path_factory):
